@@ -42,6 +42,7 @@ CALIBRATION_QUIET_BAND = {
 }
 
 
+# deviation < 1: the host ran faster than the band, or the calibration code changed
 def band_deviation(measured: float, band: tuple[float, float]) -> float:
     lo, hi = band
     if measured > hi:
@@ -227,18 +228,14 @@ def main() -> None:
     }
     # Sidecar named by (cpus, sf) so a scaling run (the driver re-runs
     # at a lower core count) no longer clobbers the 32-core per-query
-    # exec-only record (r10 verdict "What's wrong" #5). The legacy
-    # un-suffixed name is still written for one release so existing
-    # tooling keeps working; the one-line artifact points at the
-    # suffixed file.
+    # exec-only record (r10 verdict "What's wrong" #5).
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf_tag = str(sf_of(SF_DIR)).replace("-1.0", "unknown")
     sidecar_name = f"BENCH_detail_c{cpus}_sf{sf_tag}.json"
     here = os.path.dirname(os.path.abspath(__file__))
-    for fname in (sidecar_name, "BENCH_detail.json"):
-        with open(os.path.join(here, fname), "w") as f:
-            json.dump(detail, f, indent=1)
-            f.write("\n")
+    with open(os.path.join(here, sidecar_name), "w") as f:
+        json.dump(detail, f, indent=1)
+        f.write("\n")
     print(
         json.dumps(
             {

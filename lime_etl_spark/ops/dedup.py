@@ -450,11 +450,14 @@ def minhash_lsh_candidates(
     hot_bucket_cap defaults from $LIME_LSH_HOT_BUCKET_CAP (4096): at
     that cap a pathological cell carries ~64 KB of ids and emits ≤ ~16M
     pairs — a normal task's work — and a 1M-doc bucket that previously
-    sat in one task spreads over ~30k cells."""
+    sat in one task spreads over ~30k cells. A cap below 1 (argument or
+    env) raises ValueError."""
     if hot_bucket_cap is None:
         import os
 
         hot_bucket_cap = int(os.environ.get("LIME_LSH_HOT_BUCKET_CAP", "4096"))
+    if hot_bucket_cap < 1:
+        raise ValueError("hot_bucket_cap must be >= 1")
     cap = hot_bucket_cap
     allbands = minhash_bands(df, id_col, text_col, n)
     buckets = (

@@ -148,9 +148,10 @@ def process_batch(
     # every mode routes through DecisionIdGuard (round-10): disk — and
     # auto before its measured crossover — reproduces the round-8
     # per-batch read INSIDE the guard (state._disk_prior_ids builds the
-    # identical plan); cached/sharded (and auto past crossover) use the
-    # amortized broadcast probe + tiny increment joins. record() is a
-    # no-op on the disk path, so the call below is mode-agnostic.
+    # identical plan); auto past its crossover uses the amortized exact
+    # broadcast probe + tiny increment joins, and bloom the bitset
+    # screen + exact confirm. record() is a no-op on the disk path, so
+    # the call below is mode-agnostic.
     guard = decision_guard(decisions_path, "doc_id")
     guarded = guard.filter_prior(new_docs, batch_id)
     # eager localCheckpoint, NOT cache(): in disk mode this frame embeds
@@ -161,7 +162,7 @@ def process_batch(
     # on the part files being swapped; found by the empty-batch test the
     # moment the prior-ids guard landed). The checkpoint snapshots the
     # batch-sized rows once, severing the decisions scan from every
-    # later plan. (In cached-guard mode the pin buys the
+    # later plan. (In the broadcast phase the pin buys the
     # one-materialization-for-three-writes and runs the guard's Arrow
     # probe exactly once.)
     new_docs_pin = _Pin(guarded)

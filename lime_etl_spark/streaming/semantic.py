@@ -207,8 +207,9 @@ def _process_batch_inner(spark, ranked, batch_id, state_dir, threshold) -> None:
     decisions_path = os.path.join(state_dir, DECISIONS_SUBDIR)
     # every mode routes through DecisionIdGuard (round-10): disk — and
     # auto before its measured crossover — reproduces the round-8
-    # per-batch read INSIDE the guard; cached/sharded (and auto past
-    # crossover) use the amortized broadcast probe + increment joins.
+    # per-batch read INSIDE the guard; auto past its crossover uses the
+    # amortized exact broadcast probe + increment joins, and bloom the
+    # bitset screen + exact confirm.
     guard = decision_guard(decisions_path, "vec_id")
     ranked = guard.filter_prior(ranked, batch_id)
 
@@ -281,7 +282,7 @@ def _process_batch_inner(spark, ranked, batch_id, state_dir, threshold) -> None:
         )
     )
     # eager pin BEFORE the write: the plan may read the decisions dir
-    # (prior_ids anti-join, disk-guard mode) while the write replaces
+    # (decided-id anti-join, disk-guard phase) while the write replaces
     # partitions of that same dir — a lazy plan can list/read part
     # files mid-overwrite and die FAILED_READ_FILE (race surfaced by
     # the round-8 generative dedup_ingest family in the LSH twin of

@@ -40,38 +40,42 @@ def read_state_or_empty(spark: SparkSession, path: str, schema: str) -> DataFram
 # ---------------------------------------------------------------------------
 
 
-def guard_mode() -> str:
-    """Re-delivery guard mode (env ``LIME_REDELIVERY_GUARD``):
+_GUARD_MODES = ("auto", "disk", "bloom")
 
-    - ``auto`` (default, round-10): start on the per-batch disk
-      anti-join (cheapest for small/fixed corpora — the r9-measured
-      pessimization) and FLIP to the broadcast guard when the measured
-      disk-read cost crosses the measured fixed probe cost. The
-      crossover is derived from two on-host measurements per epoch, not
-      a hardcoded id count (SCALE.md round-9 measured ~2M ids on that
-      host; another host lands elsewhere).
-    - ``cached``: always the broadcast guard (round-9 behavior).
-    - ``sharded``: the broadcast guard with the epoch array split into
-      bounded consecutive shards, each its own broadcast — lifts the
-      single-broadcast ~2 GB pickle/transport ceiling toward the
-      1e9-id regime (the driver still holds the full array once per
-      epoch; that transit is the next documented ceiling).
-    - ``bloom``: bloom + exact-confirm two-phase (round-10, the rung
-      past ``sharded``): holds/broadcasts only an m-bit bitset
-      (``LIME_GUARD_BLOOM_BITS_PER_ID``, default 20 bits/id) instead
-      of the exact id array; bloom-negative rows pass with no disk
-      touch (no false negatives), bloom-positive ids are exact-
-      confirmed against a candidate-pruned disk read — output is
-      IDENTICAL to the disk twin, not probabilistic. The bitset itself
-      ships as word-range broadcast shards past ~1 GiB
-      (``LIME_GUARD_BLOOM_SHARD_WORDS``), so the rung's own broadcast
-      never hits the single-pickle ceiling either.
+
+def _checked_mode(mode: str) -> str:
+    if mode not in _GUARD_MODES:
+        raise ValueError(
+            f"re-delivery guard mode {mode!r} is not one of "
+            f"{', '.join(_GUARD_MODES)} (env LIME_REDELIVERY_GUARD)"
+        )
+    return mode
+
+
+def guard_mode() -> str:
+    """Re-delivery guard mode (env ``LIME_REDELIVERY_GUARD``, the
+    guard's only env variable; any other value raises ``ValueError``):
+
+    - ``auto`` (default): start on the per-batch disk anti-join
+      (cheapest for small/fixed corpora) and FLIP to the exact
+      broadcast probe when the measured disk-read cost crosses the
+      measured fixed probe cost. The crossover is derived from two
+      on-host measurements per epoch, not a hardcoded id count; the
+      first measurement runs on the first batch that sees existing
+      state, so a large state flips at once.
+    - ``bloom``: bloom + exact-confirm two-phase: holds/broadcasts only
+      an m-bit bitset (``_BLOOM_BITS_PER_ID`` bits/id) instead of the
+      exact id array; bloom-negative rows pass with no disk touch (no
+      false negatives), bloom-positive ids are exact-confirmed against
+      a candidate-pruned disk read — output is IDENTICAL to the disk
+      twin, not probabilistic.
     - ``disk``: the round-8 behavior — a full O(state) decisions read
       per micro-batch. Kept as the differential-testing twin: the
       generative ingest families run green on every mode against it.
     """
-    mode = os.environ.get("LIME_REDELIVERY_GUARD", "auto").strip().lower()
-    return mode if mode in ("disk", "cached", "sharded", "auto", "bloom") else "auto"
+    return _checked_mode(
+        os.environ.get("LIME_REDELIVERY_GUARD", "auto").strip().lower()
+    )
 
 
 class _Pin:
@@ -129,8 +133,8 @@ def _unseen_filter(bcs, shard_maxes, id_col: str):
     sorted id array; ``shard_maxes[k]`` is shard k's last element, so
     ``searchsorted(shard_maxes, v)`` names the ONLY shard that can
     contain ``v`` (values past the global max map to index len(bcs) —
-    a miss without touching any shard). One shard (cached mode) makes
-    this exactly the round-9 single-broadcast probe. An entry may also
+    a miss without touching any shard). One shard makes this exactly
+    the round-9 single-broadcast probe. An entry may also
     be a plain sorted int64 ndarray instead of a Broadcast — bloom
     mode's per-batch confirmed set is bounded by the batch size, so it
     rides the task closure rather than a broadcast that would need a
@@ -178,14 +182,28 @@ def _unseen_filter(bcs, shard_maxes, id_col: str):
     return fn
 
 
-# -- bloom rung -------------------------------------------------------------
+# Both broadcast structures — the exact sorted id array and the bloom
+# bitset — ship as consecutive slices of at most this many 8-byte items,
+# one broadcast each: 2^25 items = 256 MiB, far below the ~2 GB
+# single-broadcast pickle ceiling. Below it (every measured workload)
+# a structure ships as ONE broadcast; 1e9 exact ids become ~30 slices.
+_BROADCAST_SLICE_ITEMS = 1 << 25
+
+
+def _broadcast_slices(sc, arr) -> list:
+    """Broadcast ``arr`` as consecutive ``_BROADCAST_SLICE_ITEMS``-item
+    slices. The probe kernels dispatch into the slices without
+    concatenating them, so no executor holds a second copy."""
+    n = _BROADCAST_SLICE_ITEMS
+    return [sc.broadcast(arr[i : i + n]) for i in range(0, len(arr), n)]
+
+
+# -- bloom mode -------------------------------------------------------------
 #
-# The rung past `sharded` on the guard's scale ladder (SCALE.md): at
-# ~1e9 decided ids the exact sorted array is ~8 GB held on the driver
-# and shipped (sharded) to every executor. The bloom guard holds and
-# broadcasts only an m-bit bitset (LIME_GUARD_BLOOM_BITS_PER_ID bits
-# per id, default 20 → ~2.5 GB/1e9 ids at ~1e-4 fp — and the knob dials
-# it down to whatever the deployment can hold), screens each batch with
+# At ~1e9 decided ids the exact sorted array is ~8 GB held on the driver
+# and shipped (sliced) to every executor. The bloom guard holds and
+# broadcasts only an m-bit bitset (_BLOOM_BITS_PER_ID bits per id →
+# ~2.5 GB/1e9 ids at ~1e-4 fp), screens each batch with
 # it, and EXACT-CONFIRMS the (rare) bloom-positive ids against a
 # candidate-pruned disk read. No false negatives exist by construction,
 # so bloom-negative rows are definitely-unseen and never touch disk;
@@ -196,17 +214,10 @@ def _unseen_filter(bcs, shard_maxes, id_col: str):
 # discards them instead of holding the array.
 
 
-def _bloom_params() -> int:
-    """Bits per decided id (env ``LIME_GUARD_BLOOM_BITS_PER_ID``,
-    default 20, floor 2). Capacity is sized with 2x headroom at build,
-    so the steady-state rate sits at >=10 effective bits/id until the
-    compaction-time resize triggers."""
-    try:
-        return max(2, int(os.environ.get("LIME_GUARD_BLOOM_BITS_PER_ID", "20")))
-    except ValueError:
-        return 20
-
-
+# Bits per decided id. Capacity is sized with 2x headroom at build, so
+# the steady-state rate sits at >=10 effective bits/id until the
+# compaction-time resize triggers.
+_BLOOM_BITS_PER_ID = 20
 _BLOOM_K = 7  # optimal k for ~10 effective bits/id at full capacity
 
 
@@ -249,7 +260,7 @@ def _bloom_set(bitset, vals, m_bits: int, chunk: int = 4_000_000) -> None:
     peak extra memory one chunk (~32 MB) regardless of n. The
     remaining floor is the random scatter itself (~80 ns/element), so
     a 1e9-id epoch build lands at ~15 min — once per epoch, not per
-    batch, and documented in SCALE.md next to the sharded-exact
+    batch, and documented in SCALE.md next to the exact-array
     alternative for build-time-sensitive deployments."""
     import numpy as np
 
@@ -294,26 +305,6 @@ def _bloom_set(bitset, vals, m_bits: int, chunk: int = 4_000_000) -> None:
             np.bitwise_or.at(bitset, w[:c], b[:c])
 
 
-def _bloom_shard_words() -> int:
-    """Words per broadcast shard of the bitset (env
-    ``LIME_GUARD_BLOOM_SHARD_WORDS``, default 2^27 = 1 GiB of uint64
-    words, floor 1). The probe hashes span the WHOLE bit space, so
-    every executor needs every shard either way — sharding changes
-    nothing about total transport, it only keeps each individual
-    broadcast pickle under the ~2 GB single-object ceiling (the same
-    limit that motivated the exact-array ``sharded`` mode). At the
-    default bitset sizing (20 bits/id, 2x headroom) a single broadcast
-    would cap the bloom rung at ~400M ids — below the 1e9 regime it
-    exists for; with 1 GiB shards the same regime ships as ~5
-    broadcasts."""
-    try:
-        return max(
-            1, int(os.environ.get("LIME_GUARD_BLOOM_SHARD_WORDS", str(1 << 27)))
-        )
-    except ValueError:
-        return 1 << 27
-
-
 def _bloom_hits_sharded(shards, wps: int, vals, m_bits: int):
     """Boolean mask: True where ALL k probe bits are set (bloom-positive
     — decided, OR a false positive the exact confirm will clear).
@@ -344,16 +335,12 @@ def _bloom_hits_sharded(shards, wps: int, vals, m_bits: int):
     return hit
 
 
-def _bloom_hits(bitset, vals, m_bits: int):
-    """Single-array convenience wrapper over ``_bloom_hits_sharded``."""
-    return _bloom_hits_sharded([bitset], len(bitset), vals, m_bits)
-
-
-def _bloom_candidates(bcs, wps: int, m_bits: int, id_col: str):
+def _bloom_candidates(bcs, m_bits: int, id_col: str):
     """Arrow kernel factory: emit only the BLOOM-POSITIVE ids of each
     batch (one bigint column). NULL ids are never candidates — an
     equality anti-join cannot match NULL, so the disk twin passes them
-    through and so must we."""
+    through and so must we. Every slice but the last is full, so the
+    first slice's length is the words-per-slice dispatch stride."""
 
     def fn(batches):
         import pyarrow as pa
@@ -368,7 +355,8 @@ def _bloom_candidates(bcs, wps: int, m_bits: int, id_col: str):
             col = rb.column(rb.schema.get_field_index(id_col))
             null_mask = pc.is_null(col).to_numpy(zero_copy_only=False)
             vals = col.fill_null(0).to_numpy(zero_copy_only=False)
-            hit = _bloom_hits_sharded(shards, wps, vals, m_bits) & ~null_mask
+            hit = _bloom_hits_sharded(shards, len(shards[0]), vals, m_bits)
+            hit &= ~null_mask
             if hit.any():
                 yield pa.RecordBatch.from_arrays(
                     [pa.array(vals[hit], type=pa.int64())], [id_col]
@@ -492,9 +480,9 @@ class DecisionIdGuard:
     plus the increment joins — independent of how the state grows
     (SOAK_guard_scale.json). The epoch costs are the once-per-rebuild
     Arrow collect (8 GB driver transit at 1e9 ids — the documented
-    ceiling of the driver-held array; beyond it, shard the array or
-    swap the probe for a bloom+exact-confirm two-phase, both O(batch)
-    per batch) and the once-per-compaction merge.
+    ceiling of the driver-held array; beyond it, ``bloom`` swaps the
+    probe for a bloom+exact-confirm two-phase, still O(batch) per
+    batch) and the once-per-compaction merge.
 
     Executor-loss caveat (also in SCALE.md): the increments use
     localCheckpoint, whose blocks are not recomputable after executor
@@ -504,32 +492,27 @@ class DecisionIdGuard:
     session restart). Broadcasts, by contrast, re-fetch from the driver
     transparently.
 
-    Round-10 modes (see guard_mode):
+    Modes (see guard_mode):
 
     - ``auto`` (default) starts on the DISK phase — filter_prior builds
       the round-8 per-batch anti-join plan verbatim — and flips to the
-      broadcast phase when the measured decisions read at the current
-      size exceeds the measured fixed probe cost
+      exact broadcast phase when the measured decisions read at the
+      current size exceeds the measured fixed probe cost
       (_measure_probe_fixed_cost); the crossover is an on-host
       measurement, never a hardcoded id count, and the flip reuses the
       measuring read as the epoch read. Small fixed corpora therefore
       never pay the ~1 s/batch probe overhead the r9 verdict called a
       pessimization, and unbounded corpora flip exactly when disk
-      starts losing.
-    - ``sharded`` splits the epoch array into consecutive
-      LIME_GUARD_SHARD_ROWS-id slices, each its own broadcast, probed
-      via a shard-max searchsorted dispatch — lifting the single
-      -broadcast ~2 GB pickle/transport ceiling (the next ceiling, the
-      once-per-epoch driver transit of the full array, stays documented
-      in SCALE.md with bloom+exact-confirm as the following rung).
-    - ``bloom`` is that following rung, implemented: the driver folds
-      the epoch ids into an m-bit bloom bitset and DISCARDS the array
-      (steady-state driver hold and executor broadcast drop from
-      8 bytes/id to bits_per_id/8 — dialable via
-      LIME_GUARD_BLOOM_BITS_PER_ID; bitsets past ~1 GiB ship as
-      word-range broadcast shards, see _bloom_shard_words). Per batch:
-      bloom-negative rows
-      are definitely-unseen (a bloom has no false negatives) and never
+      starts losing. Past _BROADCAST_SLICE_ITEMS ids the epoch array
+      ships as several broadcasts, probed via a slice-max searchsorted
+      dispatch, so it never hits the single-broadcast ~2 GB pickle
+      ceiling.
+    - ``bloom``: the driver folds the epoch ids into an m-bit bloom
+      bitset and DISCARDS the array (steady-state driver hold and
+      executor broadcast drop from 8 bytes/id to _BLOOM_BITS_PER_ID/8;
+      bitsets past _BROADCAST_SLICE_ITEMS words ship as several
+      broadcasts too). Per batch: bloom-negative rows are
+      definitely-unseen (a bloom has no false negatives) and never
       touch disk; bloom-positive ids — true re-deliveries plus an
       ~2^-k sliver of false positives — are exact-confirmed with ONE
       narrow decisions read semi-joined to the broadcast candidate
@@ -541,7 +524,7 @@ class DecisionIdGuard:
       build-time capacity marks a deferred resize, and the next
       filter_prior rebuilds from disk at the new size — correctness
       never depends on the fp rate, only the confirm frequency does.
-      What this rung does NOT change: the epoch build still observes
+      What this mode does NOT change: the epoch build still observes
       every decided id once (any rebuild must), and record() keeps the
       same exact pinned increments between compactions.
     """
@@ -555,15 +538,15 @@ class DecisionIdGuard:
     def __init__(self, path: str, id_col: str, mode: str | None = None):
         self.path = path
         self.id_col = id_col
-        self.mode = mode if mode is not None else guard_mode()
-        # disk/auto start on the per-batch disk anti-join; cached and
-        # sharded go straight to the broadcast guard
-        self.phase = "disk" if self.mode in ("disk", "auto") else "bc"
+        self.mode = guard_mode() if mode is None else _checked_mode(mode)
+        # disk/auto start on the per-batch disk anti-join; bloom goes
+        # straight to the bitset screen
+        self.phase = "bc" if self.mode == "bloom" else "disk"
         self._lock = threading.RLock()
         self._app_id: str | None = None
         self._base_ids = None  # sorted int64 numpy array (driver copy)
-        self._bcs: list = []  # broadcasts of consecutive shards of it
-        self._shard_maxes = None  # int64 array of each shard's last id
+        self._bcs: list = []  # broadcasts of consecutive slices of it
+        self._shard_maxes = None  # int64 array of each slice's last id
         # bloom mode: driver bitset copy + sizing (the exact array is
         # folded in at build and DISCARDED — that is the point)
         self._bloom = None  # uint64 word array
@@ -571,7 +554,6 @@ class DecisionIdGuard:
         self._bloom_n = 0  # ids folded in so far
         self._bloom_cap = 0  # resize threshold (2x headroom at build)
         self._bloom_resize = False  # compaction crossed capacity
-        self._bloom_wps = 0  # words per broadcast shard of the bitset
         self._base_parts: set[int] = set()
         self._incs: dict[int, _Pin] = {}  # batch_id -> (id_col) frame
         self._batches = 0  # auto: filter_prior calls while on disk
@@ -579,18 +561,6 @@ class DecisionIdGuard:
         self._fixed_cost: float | None = None
 
     # -- plumbing ------------------------------------------------------
-
-    def _broadcast_bloom_shards(self, spark: SparkSession) -> list:
-        """Ship the driver bitset as consecutive word-range slices, each
-        under the single-object broadcast pickle ceiling (see
-        ``_bloom_shard_words``). At test/default small sizes this is one
-        broadcast — exactly the prior behavior."""
-        wps = _bloom_shard_words()
-        self._bloom_wps = wps
-        return [
-            spark.sparkContext.broadcast(self._bloom[i : i + wps])
-            for i in range(0, len(self._bloom), wps)
-        ]
 
     def _disk_parts(self, spark: SparkSession) -> set[int]:
         from lime_etl_spark.io.fsutil import HadoopFS
@@ -638,19 +608,11 @@ class DecisionIdGuard:
         self._base_parts = set()
         self._incs = {}
 
-    def _shard_rows(self) -> int:
-        """Max ids per broadcast shard (sharded mode). Default 32M ids
-        = 256 MB per shard — far below the single-broadcast ~2 GB
-        pickle ceiling; 1e9 ids become ~32 shards."""
-        try:
-            return int(os.environ.get("LIME_GUARD_SHARD_ROWS", "32000000"))
-        except ValueError:
-            return 32_000_000
-
     def _publish(self, spark: SparkSession, ids) -> None:
         import numpy as np
 
         self._destroy_bc()
+        sc = spark.sparkContext
         if self.mode == "bloom":
             # fold the ids into a fresh bitset and DISCARD them: the
             # driver holds m/8 bytes, not 8 bytes/id. Sized with 2x
@@ -658,31 +620,21 @@ class DecisionIdGuard:
             # the compaction-time resize check triggers a rebuild.
             n = max(int(len(ids)), 1)
             self._bloom_cap = 2 * n
-            self._bloom_m = max(1 << 20, self._bloom_cap * _bloom_params())
+            self._bloom_m = max(1 << 20, self._bloom_cap * _BLOOM_BITS_PER_ID)
             self._bloom = np.zeros((self._bloom_m + 63) // 64, dtype=np.uint64)
             _bloom_set(self._bloom, ids, self._bloom_m)
             self._bloom_n = int(len(ids))
             self._bloom_resize = False
             if self._bloom_n:
-                self._bcs = self._broadcast_bloom_shards(spark)
+                self._bcs = _broadcast_slices(sc, self._bloom)
             return
         self._base_ids = ids
         if len(ids) == 0:
             return
-        rows = self._shard_rows()
-        if len(ids) > rows:
-            # EVERY broadcast path shards past the row limit, not just
-            # the `sharded` mode: a cached/auto guard that outgrew
-            # ~250M ids would otherwise hit the same ~2 GB
-            # single-pickle ceiling the mode exists to lift. Below the
-            # limit this is one shard — the prior cached behavior
-            # exactly; the mode knob's remaining role is forcing the
-            # multi-shard dispatch in tests via LIME_GUARD_SHARD_ROWS.
-            shards = [ids[i : i + rows] for i in range(0, len(ids), rows)]
-        else:
-            shards = [ids]
-        self._bcs = [spark.sparkContext.broadcast(s) for s in shards]
-        self._shard_maxes = np.array([s[-1] for s in shards], dtype=np.int64)
+        self._bcs = _broadcast_slices(sc, ids)
+        # each slice's last id: the probe's slice-dispatch table
+        ends = np.arange(1, len(self._bcs) + 1) * _BROADCAST_SLICE_ITEMS
+        self._shard_maxes = ids[np.minimum(ends, len(ids)) - 1]
 
     def _rebuild(self, spark: SparkSession, disk_parts: set[int], batch_id: int) -> None:
         import numpy as np
@@ -793,7 +745,7 @@ class DecisionIdGuard:
         and when any exist, exact-confirm them with a narrow disk read
         semi-joined to the broadcast candidate set. The confirmed set —
         bounded by the batch size — then drives the SAME sorted-array
-        probe kernel the exact modes use, as a plain closure array.
+        probe kernel the exact phase uses, as a plain closure array.
         Output is row-identical to the disk twin: a bloom false
         positive that is NOT in the decisions state fails the confirm
         and passes through."""
@@ -805,9 +757,7 @@ class DecisionIdGuard:
         cand_tbl = (
             df.select(self.id_col)
             .mapInArrow(
-                _bloom_candidates(
-                    self._bcs, self._bloom_wps, self._bloom_m, self.id_col
-                ),
+                _bloom_candidates(self._bcs, self._bloom_m, self.id_col),
                 f"{self.id_col} bigint",
             )
             .toArrow()
@@ -835,26 +785,6 @@ class DecisionIdGuard:
         return df.mapInArrow(
             _unseen_filter([confirmed], maxes, self.id_col), df.schema
         )
-
-    def prior_ids(self, spark: SparkSession, batch_id: int) -> DataFrame:
-        """The decided-id set as a DataFrame (inspection/testing; the
-        hot path is filter_prior — this ships the driver array back out
-        through createDataFrame)."""
-        with self._lock:
-            if self.phase == "disk":
-                return self._disk_prior_ids(spark, batch_id)
-            if self.mode == "bloom":
-                # a bitset cannot enumerate its members; the exact set
-                # lives on disk (record() runs after all state writes)
-                return self._disk_prior_ids(spark, batch_id)
-            self._validate(spark, batch_id)
-            base = self._base_ids
-            rows = [(int(i),) for i in (base if base is not None else [])]
-            out = spark.createDataFrame(rows, f"{self.id_col} bigint")
-            for bid, pin in self._incs.items():
-                if bid != batch_id:
-                    out = out.union(pin.df)
-            return out
 
     def record(self, spark: SparkSession, batch_id: int, ids: DataFrame) -> None:
         """Extend the guard with ``batch_id``'s decided ids. Call ONLY
@@ -912,7 +842,9 @@ class DecisionIdGuard:
                 except Exception:
                     pass
             self._bcs = (
-                self._broadcast_bloom_shards(spark) if self._bloom_n else []
+                _broadcast_slices(spark.sparkContext, self._bloom)
+                if self._bloom_n
+                else []
             )
             self._base_parts |= folded_parts
             if self._bloom_n > self._bloom_cap:

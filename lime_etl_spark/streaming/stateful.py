@@ -105,113 +105,3 @@ def track_user_activity(
             timeoutConf=timeout_conf,
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas — the Spark 4 native stateful-processor API
-# ---------------------------------------------------------------------------
-
-
-def transform_with_state_available() -> bool:
-    """transformWithStateInPandas runs its stateful processor in a
-    separate Python worker that talks to the JVM state server over
-    gRPC; without grpcio the worker crashes opaquely during schema
-    validation ("driver worker exited unexpectedly"). Gate on the
-    import, exactly like the Kafka connector and media decoders."""
-    try:
-        import grpc  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _user_activity_processor(state_ttl_ms: int | None):
-    """StatefulProcessor twin of track_user_activity, built on the
-    Spark 4 transformWithState API: typed ValueState instead of a raw
-    tuple, per-state TTL instead of a manual timeout timer. Requires
-    the RocksDB state store provider (API contract — see
-    use_rocksdb_state_store)."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    state_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("total", DoubleType()),
-            StructField("last_id", LongType()),
-            # champion ts (ns) persisted for the same chunk/batch-order
-            # reasons as track_user_activity's STATE_SCHEMA
-            StructField("last_ts_ns", LongType()),
-        ]
-    )
-
-    class UserActivityProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._profile = handle.getValueState(
-                "profile", state_schema, ttlDurationMs=state_ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            if self._profile.exists():
-                n, total, last_id, last_ts_ns = self._profile.get()
-            else:
-                n, total, last_id, last_ts_ns = 0, 0.0, -1, -1
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-                mx = pdf["ts"].max()
-                if pd.isna(mx):  # all-null ts chunk (see batch twin)
-                    continue
-                cand_id = int(pdf.loc[pdf["ts"] == mx, "event_id"].max())
-                cand_ns = int(pd.Timestamp(mx).value)
-                if (cand_ns, cand_id) > (last_ts_ns, last_id):
-                    last_ts_ns, last_id = cand_ns, cand_id
-            # raw total in state; round only on emit (see batch twin)
-            self._profile.update((n, total, last_id, last_ts_ns))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                    "last_event_id": [last_id],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return UserActivityProcessor()
-
-
-def track_user_activity_tws(
-    events: DataFrame, state_ttl_ms: int | None = None
-) -> DataFrame:
-    """transformWithStateInPandas variant of track_user_activity —
-    same output contract, Spark 4 stateful-processor API underneath
-    (typed ValueState, per-state TTL). Requires grpcio (see
-    transform_with_state_available) and the RocksDB state store."""
-    if not transform_with_state_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs grpcio, which this "
-            "environment lacks; use track_user_activity "
-            "(applyInPandasWithState) instead"
-        )
-    # TTL requires a clock: ValueState with ttlDurationMs under
-    # TimeMode.None raises STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_
-    # ASSIGN_TTL at query start — the advertised production TTL knob
-    # could never actually be used until this was keyed on the mode
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_user_activity_processor(state_ttl_ms),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="processingTime" if state_ttl_ms is not None else "None",
-    )

@@ -6,9 +6,12 @@ decisions read; SCALE.md costed it (~8 GB/batch at 1e9 accepted docs)
 and named the amortized design this round implements. Bars here:
 
 - EQUIVALENCE: multi-batch drains with cross-batch re-deliveries
-  produce byte-identical decisions/state under the cached guard and
-  under LIME_REDELIVERY_GUARD=disk (the round-8 behavior, kept as the
-  differential twin) — for both the LSH gate and the semantic gate.
+  produce byte-identical decisions/state under the exact broadcast
+  phase and under LIME_REDELIVERY_GUARD=disk (the round-8 behavior,
+  kept as the differential twin) — for both the LSH gate and the
+  semantic gate. The exact phase is reached the way production reaches
+  it: ``auto`` with its calibration forced to 0 s, so the guard flips
+  on the first batch that sees existing state (_force_exact).
 - COMPACTION: folding increments into the pinned base changes nothing.
 - STALENESS: wiping/rebuilding the state dir under a live guard is
   detected by the per-batch partition listing (rebuild, not stale ids).
@@ -18,7 +21,7 @@ and named the amortized design this round implements. Bars here:
   early would make the guard hide the ids and the replay skip them).
 
 The generative families (tools/llmgen.py dedup_ingest/semantic_ingest)
-run on the cached path by default and pin the same contract at volume.
+run under every guard mode and pin the same contract at volume.
 """
 
 from __future__ import annotations
@@ -37,6 +40,40 @@ from lime_etl_spark.streaming.state import read_state_or_empty
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
+
+
+def _force_exact(monkeypatch):
+    """``auto`` with a zero probe calibration: any real decisions read
+    exceeds it, so the guard flips to the exact broadcast phase on the
+    first batch that sees existing state."""
+    monkeypatch.setattr(sstate, "_measure_probe_fixed_cost", lambda _s: 0.0)
+    monkeypatch.setenv("LIME_REDELIVERY_GUARD", "auto")
+
+
+def _seed_decisions(spark, path, ids) -> str:
+    """A decisions dir holding ``ids`` in ingest_batch=0."""
+    state = str(path)
+    spark.createDataFrame(
+        [(i, 0) for i in ids], "doc_id bigint, ingest_batch bigint"
+    ).write.partitionBy("ingest_batch").parquet(state)
+    return state
+
+
+def _disk_twin(spark, state, batch, batch_id):
+    """The exact round-8 anti-join of ``batch`` against every decision
+    outside ``batch_id`` — the reference every guard phase must equal."""
+    prior = (
+        spark.read.schema("doc_id bigint, ingest_batch bigint")
+        .parquet(state)
+        .filter(F.col("ingest_batch") != batch_id)
+        .select("doc_id")
+    )
+    return batch.join(prior, "doc_id", "left_anti")
+
+
+def _ids(df):
+    """doc_id values, NULL-safe sorted."""
+    return sorted((r.doc_id is None, r.doc_id or 0) for r in df.collect())
 
 
 def _decisions(spark, state):
@@ -64,16 +101,22 @@ def _drain_lsh(spark, docs, state: str, *, redeliver: bool) -> None:
 
 
 @pytest.mark.slow
-def test_lsh_gate_cached_equals_disk_guard(spark, docs, tmp_path, monkeypatch):
+def test_lsh_gate_exact_phase_equals_disk_guard(
+    spark, docs, tmp_path, monkeypatch
+):
     monkeypatch.setenv("LIME_REDELIVERY_GUARD", "disk")
     disk_state = str(tmp_path / "disk")
     _drain_lsh(spark, docs, disk_state, redeliver=True)
-    monkeypatch.setenv("LIME_REDELIVERY_GUARD", "cached")
-    cached_state = str(tmp_path / "cached")
-    _drain_lsh(spark, docs, cached_state, redeliver=True)
+    _force_exact(monkeypatch)
+    exact_state = str(tmp_path / "exact")
+    _drain_lsh(spark, docs, exact_state, redeliver=True)
+    guard = sstate.decision_guard(
+        os.path.join(exact_state, sdedup.DECISIONS_SUBDIR), "doc_id"
+    )
+    assert guard.phase == "bc", "auto never flipped to the exact phase"
 
     assert _rows(_decisions(spark, disk_state)) == _rows(
-        _decisions(spark, cached_state)
+        _decisions(spark, exact_state)
     )
     for sub, schema in (
         (sdedup.BANDS_SUBDIR, sdedup._BANDS_SCHEMA),
@@ -82,10 +125,10 @@ def test_lsh_gate_cached_equals_disk_guard(spark, docs, tmp_path, monkeypatch):
         assert _rows(
             read_state_or_empty(spark, os.path.join(disk_state, sub), schema)
         ) == _rows(
-            read_state_or_empty(spark, os.path.join(cached_state, sub), schema)
+            read_state_or_empty(spark, os.path.join(exact_state, sub), schema)
         )
     # the re-delivered ids were decided exactly once
-    dec = _decisions(spark, cached_state)
+    dec = _decisions(spark, exact_state)
     assert dec.groupBy("doc_id").count().filter("count > 1").count() == 0
 
 
@@ -93,20 +136,23 @@ def test_lsh_gate_cached_equals_disk_guard(spark, docs, tmp_path, monkeypatch):
 def test_lsh_gate_compaction_preserves_decisions(
     spark, docs, tmp_path, monkeypatch
 ):
-    monkeypatch.setenv("LIME_REDELIVERY_GUARD", "cached")
+    _force_exact(monkeypatch)
     monkeypatch.setattr(sstate.DecisionIdGuard, "COMPACT_EVERY", 2)
     state = str(tmp_path / "state")
     _drain_lsh(spark, docs, state, redeliver=True)
     guard = sstate.decision_guard(
         os.path.join(state, sdedup.DECISIONS_SUBDIR), "doc_id"
     )
-    # COMPACT_EVERY=2 over 3 non-empty batches folded at least once
+    # flipped on batch 1, then COMPACT_EVERY=2 folded batches 1 and 2
+    assert guard.phase == "bc"
     assert guard._base_ids is not None and len(guard._base_parts) >= 2
     dec = _decisions(spark, state)
     assert dec.count() == docs.select("doc_id").distinct().count()
     assert dec.groupBy("doc_id").count().filter("count > 1").count() == 0
-    # and the guard frame itself equals the decisions' id set
-    assert _rows(guard.prior_ids(spark, 99)) == _rows(dec.select("doc_id"))
+    # and the compacted guard drops every decided id, but not a fresh one
+    assert guard.filter_prior(dec.select("doc_id"), 99).count() == 0
+    fresh = spark.createDataFrame([(10**12,)], "doc_id bigint")
+    assert guard.filter_prior(fresh, 99).count() == 1
 
 
 @pytest.mark.slow
@@ -116,11 +162,15 @@ def test_guard_detects_state_dir_wipe(spark, docs, tmp_path, monkeypatch):
     the disk/cache mismatch and rebuilds."""
     import shutil
 
-    monkeypatch.setenv("LIME_REDELIVERY_GUARD", "cached")
+    _force_exact(monkeypatch)
     state = str(tmp_path / "state")
     _drain_lsh(spark, docs, state, redeliver=False)
     n_first = _decisions(spark, state).count()
     assert n_first > 0
+    guard = sstate.decision_guard(
+        os.path.join(state, sdedup.DECISIONS_SUBDIR), "doc_id"
+    )
+    assert guard.phase == "bc"
     shutil.rmtree(state)
     # fresh ingest, same path: were the guard stale, every doc would be
     # anti-joined away and decisions would come back empty
@@ -137,7 +187,7 @@ def test_crash_between_writes_replays_convergently(
     (identically) and completes the missing state writes."""
     from lime_etl_spark.io import sinks
 
-    monkeypatch.setenv("LIME_REDELIVERY_GUARD", "cached")
+    _force_exact(monkeypatch)
     state = str(tmp_path / "state")
     b0 = docs.filter(F.col("doc_id") % 3 == 0)
     sdedup.process_batch(b0, 0, state, threshold=0.5)
@@ -162,6 +212,7 @@ def test_crash_between_writes_replays_convergently(
     guard = sstate.decision_guard(
         os.path.join(state, sdedup.DECISIONS_SUBDIR), "doc_id"
     )
+    assert guard.phase == "bc"  # batch 1 ran on the exact phase
     assert 1 not in guard._incs  # crash left the increment unrecorded
 
     # the checkpoint replays batch 1; the converged state must equal a
@@ -182,7 +233,7 @@ def test_crash_between_writes_replays_convergently(
         ) == _rows(read_state_or_empty(spark, os.path.join(clean, sub), schema))
 
 
-def test_semantic_gate_cached_equals_disk_guard(spark, tmp_path, monkeypatch):
+def test_semantic_gate_exact_phase_equals_disk_guard(spark, tmp_path, monkeypatch):
     from lime_etl_spark.ops import similarity
 
     emb = read_table(spark, os.environ.get("SPARK_GRAFT_TEST_SF_DIR",
@@ -200,9 +251,13 @@ def test_semantic_gate_cached_equals_disk_guard(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("LIME_REDELIVERY_GUARD", "disk")
     disk_state = str(tmp_path / "disk")
     drain(disk_state)
-    monkeypatch.setenv("LIME_REDELIVERY_GUARD", "cached")
-    cached_state = str(tmp_path / "cached")
-    drain(cached_state)
+    _force_exact(monkeypatch)
+    exact_state = str(tmp_path / "exact")
+    drain(exact_state)
+    guard = sstate.decision_guard(
+        os.path.join(exact_state, ssem.DECISIONS_SUBDIR), "vec_id"
+    )
+    assert guard.phase == "bc", "auto never flipped to the exact phase"
     for sub, schema in (
         (ssem.DECISIONS_SUBDIR, ssem._DECISIONS_SCHEMA),
         (ssem.MEMBERS_SUBDIR, ssem._MEMBERS_SCHEMA),
@@ -210,28 +265,29 @@ def test_semantic_gate_cached_equals_disk_guard(spark, tmp_path, monkeypatch):
         assert _rows(
             read_state_or_empty(spark, os.path.join(disk_state, sub), schema)
         ) == _rows(
-            read_state_or_empty(spark, os.path.join(cached_state, sub), schema)
+            read_state_or_empty(spark, os.path.join(exact_state, sub), schema)
         )
 
 
-def test_guard_exact_on_int64_ids_beyond_2e53_with_nulls(spark, tmp_path):
+def test_guard_exact_on_int64_ids_beyond_2e53_with_nulls(
+    spark, tmp_path, monkeypatch
+):
     """Round-10 advice (medium): the probe must not transit float64.
 
     The old mapInPandas kernel saw a bigint column containing any NULL
     as float64 for the whole chunk, so ids with |id| > 2^53 were
-    rounded — adjacent huge ids collapsed and the cached guard silently
-    diverged from the exact disk anti-join (false drops AND false
-    re-decisions). Hash-derived 64-bit ids make this a real input. The
-    mapInArrow kernel keeps int64 exact; NULL ids pass through (an
-    equality anti-join can never match NULL — disk-twin parity)."""
+    rounded — adjacent huge ids collapsed and the exact broadcast guard
+    silently diverged from the exact disk anti-join (false drops AND
+    false re-decisions). Hash-derived 64-bit ids make this a real
+    input. The mapInArrow kernel keeps int64 exact; NULL ids pass
+    through (an equality anti-join can never match NULL — disk-twin
+    parity)."""
+    _force_exact(monkeypatch)
     base = 2**62 + 11  # far beyond float64's 2^53 integer range
-    decided = [base, base + 2, -(2**61) - 7]
-    state = str(tmp_path / "decisions")
-    spark.createDataFrame(
-        [(i, 0) for i in decided], "doc_id bigint, ingest_batch bigint"
-    ).write.partitionBy("ingest_batch").parquet(state)
-
-    guard = sstate.DecisionIdGuard(state, "doc_id", mode="cached")
+    state = _seed_decisions(
+        spark, tmp_path / "decisions", [base, base + 2, -(2**61) - 7]
+    )
+    guard = sstate.DecisionIdGuard(state, "doc_id", mode="auto")
     batch = spark.createDataFrame(
         [
             (base, "dup-exact"),          # decided -> dropped
@@ -245,6 +301,7 @@ def test_guard_exact_on_int64_ids_beyond_2e53_with_nulls(spark, tmp_path):
         "doc_id bigint, payload string",
     )
     out = guard.filter_prior(batch, batch_id=1)
+    assert guard.phase == "bc"
     got = sorted(
         (r.payload, r.doc_id) for r in out.collect()
     )
@@ -255,34 +312,44 @@ def test_guard_exact_on_int64_ids_beyond_2e53_with_nulls(spark, tmp_path):
         ("null-id", None),
     ]
     # the exact disk-mode anti-join agrees row-for-row
-    prior = (
-        spark.read.schema("doc_id bigint, ingest_batch bigint")
-        .parquet(state)
-        .filter(F.col("ingest_batch") != 1)
-        .select("doc_id")
-    )
     disk = sorted(
-        (r.payload, r.doc_id)
-        for r in batch.join(prior, "doc_id", "left_anti").collect()
+        (r.payload, r.doc_id) for r in _disk_twin(spark, state, batch, 1).collect()
     )
     assert got == disk
 
 
+def test_guard_mode_rejects_unknown_values(tmp_path, monkeypatch):
+    """Only auto, disk and bloom are guard modes. The retired names
+    (cached, sharded) and junk raise — from the env and from an
+    explicit mode alike — instead of silently becoming auto."""
+    for bad in ("cached", "sharded", "nonsense"):
+        monkeypatch.setenv("LIME_REDELIVERY_GUARD", bad)
+        with pytest.raises(ValueError, match="auto, disk, bloom"):
+            sstate.guard_mode()
+        with pytest.raises(ValueError, match="auto, disk, bloom"):
+            sstate.DecisionIdGuard(str(tmp_path), "doc_id")
+        with pytest.raises(ValueError, match="auto, disk, bloom"):
+            sstate.DecisionIdGuard(str(tmp_path), "doc_id", mode=bad)
+    for good in ("auto", "disk", " Bloom "):
+        monkeypatch.setenv("LIME_REDELIVERY_GUARD", good)
+        assert sstate.guard_mode() == good.strip().lower()
+
+
 @pytest.mark.slow
-def test_sharded_guard_equals_disk_and_actually_shards(
+def test_sliced_exact_guard_equals_disk_and_actually_slices(
     spark, docs, tmp_path, monkeypatch
 ):
-    """Round-10 (r9 verdict task #5): the sharded broadcast rung.
-    Forced tiny shards so a fixture-sized drain exercises the
-    multi-shard dispatch path; state must match the disk twin
-    byte-for-byte and the guard must really hold >1 shard."""
+    """Round-10 (r9 verdict task #5): the exact array past the
+    per-broadcast slice limit. Forced 64-id slices so a fixture-sized
+    drain exercises the multi-slice dispatch path; state must match the
+    disk twin byte-for-byte and the guard must really hold >1 slice."""
     monkeypatch.setenv("LIME_REDELIVERY_GUARD", "disk")
     disk_state = str(tmp_path / "disk")
     _drain_lsh(spark, docs, disk_state, redeliver=True)
-    monkeypatch.setenv("LIME_REDELIVERY_GUARD", "sharded")
-    monkeypatch.setenv("LIME_GUARD_SHARD_ROWS", "64")
-    sharded_state = str(tmp_path / "sharded")
-    _drain_lsh(spark, docs, sharded_state, redeliver=True)
+    _force_exact(monkeypatch)
+    monkeypatch.setattr(sstate, "_BROADCAST_SLICE_ITEMS", 64)
+    sliced_state = str(tmp_path / "sliced")
+    _drain_lsh(spark, docs, sliced_state, redeliver=True)
 
     for sub, schema in (
         (sdedup.DECISIONS_SUBDIR, sdedup._DECISIONS_SCHEMA),
@@ -292,34 +359,65 @@ def test_sharded_guard_equals_disk_and_actually_shards(
         assert _rows(
             read_state_or_empty(spark, os.path.join(disk_state, sub), schema)
         ) == _rows(
-            read_state_or_empty(spark, os.path.join(sharded_state, sub), schema)
+            read_state_or_empty(spark, os.path.join(sliced_state, sub), schema)
         )
     guard = sstate.decision_guard(
-        os.path.join(sharded_state, sdedup.DECISIONS_SUBDIR), "doc_id"
+        os.path.join(sliced_state, sdedup.DECISIONS_SUBDIR), "doc_id"
     )
+    assert guard.phase == "bc"
     # drive a compaction so the published base reflects all batches,
-    # then check the shard split actually engaged
+    # then check the slice split actually engaged
     guard._compact(spark)
-    assert len(guard._bcs) > 1, "shard split never engaged"
+    assert len(guard._bcs) > 1, "slice split never engaged"
     assert len(guard._base_ids) > 64
 
 
-def test_sharded_probe_exact_across_shard_boundaries(spark, tmp_path, monkeypatch):
-    """Boundary ids (shard max, max+1, the gap between shards, beyond
-    the global max) must resolve to the right shard — the searchsorted
-    dispatch edge cases."""
-    monkeypatch.setenv("LIME_GUARD_SHARD_ROWS", "3")
-    decided = [10, 20, 30, 40, 50, 60, 70]  # 3 shards: [10..30][40..60][70]
-    state = str(tmp_path / "dec")
-    spark.createDataFrame(
-        [(i, 0) for i in decided], "doc_id bigint, ingest_batch bigint"
-    ).write.partitionBy("ingest_batch").parquet(state)
-    guard = sstate.DecisionIdGuard(state, "doc_id", mode="sharded")
-    probe = [5, 10, 15, 30, 31, 40, 60, 65, 70, 71, 10**9]
+def _check_sliced_probe(spark, tmp_path, monkeypatch, slice_items, decided,
+                        probe, n_slices):
+    """Seed ``decided``, probe on the exact phase with ``slice_items``-id
+    slices, and pin the result to both the expected ids and the disk
+    anti-join."""
+    _force_exact(monkeypatch)
+    monkeypatch.setattr(sstate, "_BROADCAST_SLICE_ITEMS", slice_items)
+    state = _seed_decisions(spark, tmp_path / "decisions", decided)
+    guard = sstate.DecisionIdGuard(state, "doc_id", mode="auto")
     batch = spark.createDataFrame([(i,) for i in probe], "doc_id bigint")
-    out = sorted(r.doc_id for r in guard.filter_prior(batch, 1).collect())
-    assert out == [5, 15, 31, 65, 71, 10**9]
-    assert len(guard._bcs) == 3
+    got = _ids(guard.filter_prior(batch, 1))
+    assert guard.phase == "bc"
+    assert len(guard._bcs) == n_slices, "slicing did not engage"
+    want = sorted(
+        (i is None, i or 0) for i in probe if i is None or i not in decided
+    )
+    assert got == want
+    assert got == _ids(_disk_twin(spark, state, batch, 1))
+
+
+def test_sharded_probe_exact_across_shard_boundaries(spark, tmp_path, monkeypatch):
+    """Boundary ids (slice max, max+1, the gap between slices, beyond
+    the global max) must resolve to the right slice — the searchsorted
+    dispatch edge cases."""
+    # 3 slices: [10..30][40..60][70]
+    _check_sliced_probe(
+        spark, tmp_path, monkeypatch, 3,
+        [10, 20, 30, 40, 50, 60, 70],
+        [5, 10, 15, 30, 31, 40, 60, 65, 70, 71, 10**9], 3,
+    )
+
+
+def test_cached_guard_shards_past_row_limit_and_stays_exact(
+    spark, tmp_path, monkeypatch
+):
+    """The exact broadcast phase (the guard once called ``cached``) must
+    split an id array that outgrows the per-broadcast limit into
+    slices — otherwise a long-lived stream marches into the ~2 GB
+    single-pickle broadcast ceiling. Forced 100-id slices over 950
+    decided ids: multi-slice dispatch engages, NULL ids pass through,
+    and filter_prior still equals the disk anti-join."""
+    _check_sliced_probe(
+        spark, tmp_path, monkeypatch, 100,
+        list(range(5000, 5950)),
+        list(range(4900, 5100)) + [None, 5949, 6000], 10,
+    )
 
 
 @pytest.mark.slow
@@ -363,7 +461,7 @@ def test_auto_guard_flips_on_measured_crossover(spark, docs, tmp_path, monkeypat
 def test_bloom_guard_equals_disk_and_discards_array(
     spark, docs, tmp_path, monkeypatch
 ):
-    """Round-10 follow-on: the bloom+exact-confirm rung past sharded.
+    """Round-10 follow-on: the bloom+exact-confirm mode.
     Full-drain state must match the disk twin byte-for-byte, and the
     guard must hold ONLY the bitset — the exact id array is discarded
     at build (that is the whole point of the rung)."""
@@ -397,19 +495,15 @@ def test_bloom_guard_equals_disk_and_discards_array(
 
 
 def test_bloom_exact_under_forced_false_positives(spark, tmp_path, monkeypatch):
-    """With the bitset forced to its 2-bits-per-id floor nearly every
+    """With the bitset forced to 2 bits per id nearly every
     probe is bloom-POSITIVE — the exact-confirm pass must clear every
     false positive, so the output still equals the disk twin row for
     row, including |id| > 2^53 ids and NULL pass-through (a bloom is a
     screen, never the decision)."""
-    monkeypatch.setenv("LIME_GUARD_BLOOM_BITS_PER_ID", "2")
+    monkeypatch.setattr(sstate, "_BLOOM_BITS_PER_ID", 2)
     base = 2**62 + 11
     decided = [base, base + 2, -(2**61) - 7] + list(range(1000, 1400))
-    state = str(tmp_path / "decisions")
-    spark.createDataFrame(
-        [(i, 0) for i in decided], "doc_id bigint, ingest_batch bigint"
-    ).write.partitionBy("ingest_batch").parquet(state)
-
+    state = _seed_decisions(spark, tmp_path / "decisions", decided)
     guard = sstate.DecisionIdGuard(state, "doc_id", mode="bloom")
     batch = spark.createDataFrame(
         [
@@ -426,15 +520,8 @@ def test_bloom_exact_under_forced_false_positives(spark, tmp_path, monkeypatch):
         "doc_id bigint, payload string",
     )
     got = sorted((r.payload, r.doc_id) for r in guard.filter_prior(batch, 1).collect())
-    prior = (
-        spark.read.schema("doc_id bigint, ingest_batch bigint")
-        .parquet(state)
-        .filter(F.col("ingest_batch") != 1)
-        .select("doc_id")
-    )
     disk = sorted(
-        (r.payload, r.doc_id)
-        for r in batch.join(prior, "doc_id", "left_anti").collect()
+        (r.payload, r.doc_id) for r in _disk_twin(spark, state, batch, 1).collect()
     )
     assert got == disk
     assert ("null-id", None) in got and ("dup-exact", base) not in got
@@ -445,11 +532,7 @@ def test_bloom_all_fresh_batch_skips_confirm_entirely(spark, tmp_path):
     DataFrame object — phase 2 (the candidate-pruned disk confirm)
     never builds a plan, which is the structural form of 'definitely
     -unseen rows never touch disk'."""
-    decided = list(range(0, 4000, 2))
-    state = str(tmp_path / "decisions")
-    spark.createDataFrame(
-        [(i, 0) for i in decided], "doc_id bigint, ingest_batch bigint"
-    ).write.partitionBy("ingest_batch").parquet(state)
+    state = _seed_decisions(spark, tmp_path / "decisions", range(0, 4000, 2))
     guard = sstate.DecisionIdGuard(state, "doc_id", mode="bloom")
     fresh = spark.createDataFrame(
         [(10**7 + i,) for i in range(50)], "doc_id bigint"
@@ -465,10 +548,7 @@ def test_bloom_capacity_resize_rebuilds_and_stays_exact(
     resize; the next filter_prior rebuilds the bitset from disk at the
     new size. Decisions across the growth stay exact (one per id)."""
     monkeypatch.setattr(sstate.DecisionIdGuard, "COMPACT_EVERY", 1)
-    state = str(tmp_path / "decisions")
-    spark.createDataFrame(
-        [(0, 0)], "doc_id bigint, ingest_batch bigint"
-    ).write.partitionBy("ingest_batch").parquet(state)
+    state = _seed_decisions(spark, tmp_path / "decisions", [0])
     guard = sstate.DecisionIdGuard(state, "doc_id", mode="bloom")
     # build at capacity 2 (1 id on disk, 2x headroom)
     guard.filter_prior(spark.createDataFrame([(1,)], "doc_id bigint"), 1)
@@ -519,24 +599,20 @@ def test_bloom_set_matches_reference_positions():
         np.uint64(1) << (pos & np.uint64(63)),
     )
     assert np.array_equal(got, ref)
-    assert st._bloom_hits(got, ids, m).all()
+    assert st._bloom_hits_sharded([got], len(got), ids, m).all()
 
 
 def test_bloom_bitset_shards_match_single_broadcast(
     spark, tmp_path, monkeypatch
 ):
-    """Past ~400M ids the default-sized bitset exceeds the ~2 GB
-    single-object broadcast pickle ceiling, so the bloom guard ships it
-    as consecutive word-range slices. Forced tiny shards (64 words)
+    """Past ~50M ids the default-sized bitset exceeds one
+    _BROADCAST_SLICE_ITEMS-word broadcast, so the bloom guard ships it
+    as consecutive word-range slices. Forced tiny slices (64 words)
     must behave identically to one broadcast: same numpy probe verdicts
     and the same filter_prior output as the disk twin."""
     import numpy as np
 
-    from lime_etl_spark.streaming.state import (
-        _bloom_hits,
-        _bloom_hits_sharded,
-        _bloom_set,
-    )
+    from lime_etl_spark.streaming.state import _bloom_hits_sharded, _bloom_set
 
     # numpy level: arithmetic shard dispatch == single-array gather
     rng = np.random.default_rng(43)
@@ -549,70 +625,17 @@ def test_bloom_bitset_shards_match_single_broadcast(
     shards = [bits[i : i + wps] for i in range(0, len(bits), wps)]
     assert len(shards) > 2
     assert np.array_equal(
-        _bloom_hits_sharded(shards, wps, probe, m), _bloom_hits(bits, probe, m)
+        _bloom_hits_sharded(shards, wps, probe, m),
+        _bloom_hits_sharded([bits], len(bits), probe, m),
     )
 
-    # engine level: forced-sharded guard == disk twin
-    monkeypatch.setenv("LIME_GUARD_BLOOM_SHARD_WORDS", "64")
-    decided = list(range(2000, 2800))
-    state = str(tmp_path / "decisions")
-    spark.createDataFrame(
-        [(i, 0) for i in decided], "doc_id bigint, ingest_batch bigint"
-    ).write.partitionBy("ingest_batch").parquet(state)
+    # engine level: forced-sliced guard == disk twin
+    monkeypatch.setattr(sstate, "_BROADCAST_SLICE_ITEMS", 64)
+    state = _seed_decisions(spark, tmp_path / "decisions", range(2000, 2800))
     guard = sstate.DecisionIdGuard(state, "doc_id", mode="bloom")
     batch = spark.createDataFrame(
         [(i,) for i in range(1900, 2100)] + [(None,)], "doc_id bigint"
     )
-    got = sorted(
-        (r.doc_id is None, r.doc_id or 0)
-        for r in guard.filter_prior(batch, 1).collect()
-    )
-    assert len(guard._bcs) > 2, "shard forcing did not engage"
-    prior = (
-        spark.read.schema("doc_id bigint, ingest_batch bigint")
-        .parquet(state)
-        .filter(F.col("ingest_batch") != 1)
-        .select("doc_id")
-    )
-    disk = sorted(
-        (r.doc_id is None, r.doc_id or 0)
-        for r in batch.join(prior, "doc_id", "left_anti").collect()
-    )
-    assert got == disk
-
-
-def test_cached_guard_shards_past_row_limit_and_stays_exact(
-    spark, tmp_path, monkeypatch
-):
-    """cached/auto guards that outgrow the per-broadcast row limit must
-    shard the exact array like `sharded` mode does — otherwise a
-    long-lived stream marches into the ~2 GB single-pickle broadcast
-    ceiling. Forced 100-row shards: multi-shard dispatch engages under
-    mode=cached and filter_prior still equals the disk anti-join."""
-    monkeypatch.setenv("LIME_GUARD_SHARD_ROWS", "100")
-    decided = list(range(5000, 5950))
-    state = str(tmp_path / "decisions")
-    spark.createDataFrame(
-        [(i, 0) for i in decided], "doc_id bigint, ingest_batch bigint"
-    ).write.partitionBy("ingest_batch").parquet(state)
-    guard = sstate.DecisionIdGuard(state, "doc_id", mode="cached")
-    batch = spark.createDataFrame(
-        [(i,) for i in range(4900, 5100)] + [(None,), (5949,), (6000,)],
-        "doc_id bigint",
-    )
-    got = sorted(
-        (r.doc_id is None, r.doc_id or 0)
-        for r in guard.filter_prior(batch, 1).collect()
-    )
-    assert len(guard._bcs) == 10, "row-limit sharding did not engage"
-    prior = (
-        spark.read.schema("doc_id bigint, ingest_batch bigint")
-        .parquet(state)
-        .filter(F.col("ingest_batch") != 1)
-        .select("doc_id")
-    )
-    disk = sorted(
-        (r.doc_id is None, r.doc_id or 0)
-        for r in batch.join(prior, "doc_id", "left_anti").collect()
-    )
-    assert got == disk
+    got = _ids(guard.filter_prior(batch, 1))
+    assert len(guard._bcs) > 2, "slice forcing did not engage"
+    assert got == _ids(_disk_twin(spark, state, batch, 1))

@@ -489,46 +489,6 @@ def test_stateful_tracker_chunk_and_batch_order(spark, tmp_path):
     assert final.last_event_id == 99, got
 
 
-def test_transform_with_state_user_tracker(spark, sf_dir, tmp_path):
-    """Spark 4 transformWithStateInPandas twin of the
-    applyInPandasWithState tracker. The API needs grpcio (absent in
-    this container — verified: even the canonical example crashes the
-    TWS driver worker without it), so the call must refuse loudly when
-    gated, and produce the batch-equal profile when available."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from lime_etl_spark.io.sources import read_table
-    from lime_etl_spark.streaming import events as sevents
-    from lime_etl_spark.streaming.stateful import (
-        track_user_activity_tws,
-        transform_with_state_available,
-    )
-
-    stream = sevents.read_events_stream(spark, sevents.stage_events_dir(sf_dir))
-    if not transform_with_state_available():
-        with pytest.raises(RuntimeError, match="grpcio"):
-            track_user_activity_tws(stream)
-        return
-    sevents.use_rocksdb_state_store(spark)  # pragma: no cover - env-dependent
-    try:
-        got = sevents.run_to_memory(
-            track_user_activity_tws(stream),
-            checkpoint_dir=str(tmp_path / "ck_tws"),
-            output_mode="update",
-        )
-        rows = got.collect()
-    finally:
-        sevents.use_rocksdb_state_store(spark, enabled=False)
-    batch = read_table(spark, sf_dir, "events").groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-    g = {(r.user_id, r.n_events) for r in rows}
-    b = {(r.user_id, r.n_events) for r in batch.collect()}
-    assert g == b
-
-
 def test_kafka_sink_gated_and_payload_contract(spark, sf_dir):
     """The Kafka SINK is gated like the source; the payload shaping
     (key/value serialization) is broker-independent and must emit the

@@ -165,6 +165,18 @@ def test_lsh_hot_bucket_cap_spreads_cells(spark):
     assert got == 25 * 24 // 2
 
 
+def test_lsh_hot_bucket_cap_below_one_raises(spark, monkeypatch):
+    # A cap < 1 must fail at the call, from the argument or the env
+    # default alike — not later inside the plan's ANSI slice division.
+    df = spark.createDataFrame([(1, "a b c d")], "doc_id BIGINT, text STRING")
+    for cap in (0, -3):
+        with pytest.raises(ValueError, match="hot_bucket_cap must be >= 1"):
+            dedup.minhash_lsh_candidates(df, hot_bucket_cap=cap)
+    monkeypatch.setenv("LIME_LSH_HOT_BUCKET_CAP", "0")
+    with pytest.raises(ValueError, match="hot_bucket_cap must be >= 1"):
+        dedup.minhash_lsh_candidates(df)
+
+
 def test_simhash_similar_docs_close(spark):
     df = spark.createDataFrame(
         [
