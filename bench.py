@@ -21,7 +21,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from lime_etl_spark.registry import REGISTRY  # noqa: E402
-from lime_etl_spark.session import get_spark  # noqa: E402
+from lime_etl_spark.session import (  # noqa: E402
+    DEFAULT_LOCAL_DRIVER_MEM,
+    TIMING_JAVA_OPTIONS,
+    get_spark,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -72,7 +76,7 @@ def exec_metric(eager_plan: bool, fresh_warm: float, exec_min: float) -> float:
 
 def main() -> None:
     # Pin the collector explicitly (r6 verdict task 7): Java 17 defaults
-    # to G1 but the default heap floor (-Xms) lets the 32 GiB bench heap
+    # to G1 but the default heap floor (-Xms) lets the bench heap
     # grow in steps, and each growth step is a full-heap resize pause
     # that lands in whichever query is running — part of the ±4%
     # adjudication noise. Fixing -Xms to a working-set-sized floor and
@@ -82,7 +86,7 @@ def main() -> None:
     spark = get_spark(
         "lime_etl_spark-bench",
         extra_conf={
-            "spark.driver.extraJavaOptions": "-XX:+UseG1GC -Xms8g",
+            "spark.driver.extraJavaOptions": TIMING_JAVA_OPTIONS,
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -216,7 +220,7 @@ def main() -> None:
         # JVM runs pinned G1 with a fixed -Xms floor
         "warm_spread": warm_spread,
         "exec_spread": exec_spread,
-        "jvm": "G1, -Xms8g floor, 32g heap",
+        "jvm": f"{TIMING_JAVA_OPTIONS}, {DEFAULT_LOCAL_DRIVER_MEM} heap",
         "host_calibration": host_calibration,
         "calibration_quiet_band": {
             k: list(v) for k, v in CALIBRATION_QUIET_BAND.items()

@@ -64,8 +64,9 @@ def _build_parser() -> argparse.ArgumentParser:
     prep.add_argument(
         "--resumable",
         action="store_true",
-        help="materialize stages under OUT/_stages and resume completed "
-        "ones on re-run (the restartable form for long preps)",
+        help="keep the stages materialized under OUT/_stages and resume "
+        "completed ones on re-run (the restartable form for long preps); "
+        "without this flag OUT/_stages is cleared",
     )
 
     chk = sub.add_parser(

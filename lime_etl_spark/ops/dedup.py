@@ -451,7 +451,13 @@ def minhash_lsh_candidates(
     that cap a pathological cell carries ~64 KB of ids and emits ≤ ~16M
     pairs — a normal task's work — and a 1M-doc bucket that previously
     sat in one task spreads over ~30k cells. A cap below 1 (argument or
-    env) raises ValueError."""
+    env) raises ValueError.
+
+    Duplicate input ids produce no ``id_a == id_b`` rows: the
+    id_a < id_b filter drops them (the round-10 shape emitted them).
+    Ids are expected unique; the corpus pipeline's stage-0 gate
+    (pipelines/corpus.py ``_stage_filtered``) refuses input with
+    duplicated doc_ids before this operator runs."""
     if hot_bucket_cap is None:
         import os
 
@@ -538,6 +544,10 @@ def minhash_near_dups(
     ~linear candidate generation, exact verification only on candidates
     (pairs= mode drives common-shingle counting off the candidate list,
     so the quadratic shingle self-join never runs).
+
+    Like ``minhash_lsh_candidates``, duplicate input ids yield no
+    ``id_a == id_b`` rows; the corpus pipeline's stage-0 gate refuses
+    such input.
     """
     cands = minhash_lsh_candidates(df, id_col, text_col, n)
     return ngram_jaccard_pairs(

@@ -21,21 +21,23 @@ span window). Stage counts are returned for auditability — a corpus
 prep run that cannot say how many docs each gate dropped is not
 reproducible.
 
-Two entry points:
+One stage chain, called two ways. Each expensive stage (``filtered``,
+``survivors``, optionally ``semantic``, ``clean``) runs ONCE and is
+MATERIALIZED under ``out_dir``/_stages/<name> with a write-then-publish
+manifest, so later actions read parquet instead of recomputing it:
 
-- ``prepare_training_corpus``: one lazy plan end to end — the right
-  shape when the run is expected to complete (Catalyst sees the whole
-  pipeline; nothing is materialized twice).
-- ``prepare_training_corpus_resumable``: each expensive stage is
-  MATERIALIZED under ``out_dir``/_stages with a write-then-publish
-  manifest, and a re-run loads completed stages instead of recomputing
-  them. At 100 TB a multi-hour prep job dying at stage 4 must not
-  re-pay stages 1-3 (driver OOM, preemption, quota kill — the same
-  steady-state failures FAULT_CHECK.json rehearses at task level,
-  one level up). Determinism of every stage (hash splits, fixed
-  salts, canonical-min survivors) is what makes resume EXACT: a
-  resumed run and an uninterrupted run produce identical artifacts
-  (pinned in tests/test_pipelines.py).
+- ``prepare_training_corpus_resumable``: a re-run loads completed
+  stages instead of recomputing them. At 100 TB a multi-hour prep job
+  dying at stage 4 must not re-pay stages 1-3 (driver OOM, preemption,
+  quota kill — the same steady-state failures FAULT_CHECK.json
+  rehearses at task level, one level up). Determinism of every stage
+  (hash splits, fixed salts, canonical-min survivors) is what makes
+  resume EXACT: a resumed run and an uninterrupted run produce
+  identical artifacts (pinned in tests/test_pipelines.py).
+- ``prepare_training_corpus``: the same chain with nothing to resume —
+  it clears ``_stages`` before and after the run, so it never trusts
+  stage output from an earlier run (its contract does not assume the
+  input is immutable) and leaves only ``train`` and ``eval`` behind.
 """
 
 from __future__ import annotations
@@ -54,10 +56,11 @@ from lime_etl_spark.ops import dedup, quality, sampling, text
 from lime_etl_spark.ops.text import token_count
 
 
-def _stage_input_checked(spark: SparkSession, sf_dir: str) -> "tuple[DataFrame, int]":
-    """Stage 0: input contract. doc_id is the dedup/split/pack identity —
-    a NULL or duplicated id silently corrupts every downstream stage, so
-    the pipeline refuses such input instead of processing it.
+def _stage_filtered(spark: SparkSession, sf_dir: str) -> "tuple[DataFrame, int]":
+    """Stages 0+1: the input contract, then filter verdicts — keep only
+    'keep'. doc_id is the dedup/split/pack identity — a NULL or
+    duplicated id silently corrupts every downstream stage, so the
+    pipeline refuses such input instead of processing it.
     with_row_count folds the audit total into the same scan."""
     docs = read_table(spark, sf_dir, "documents")
     n_total = quality.gate(
@@ -65,15 +68,11 @@ def _stage_input_checked(spark: SparkSession, sf_dir: str) -> "tuple[DataFrame, 
         [quality.not_null("doc_id"), quality.unique("doc_id")],
         with_row_count=True,
     )
-    return docs, n_total
-
-
-def _stage_filtered(docs: DataFrame) -> DataFrame:
-    """Stage 1: filter verdicts — keep only 'keep'."""
     verdicts = text.filter_decisions(docs)
-    return docs.join(
+    kept = docs.join(
         verdicts.filter(F.col("keep")).select("doc_id"), "doc_id", "left_semi"
     )
+    return kept, n_total
 
 
 def _stage_survivors(kept: DataFrame, jaccard_threshold: float) -> DataFrame:
@@ -104,9 +103,9 @@ def _stage_semantic(
     Returns ``(result, cand)`` where ``cand`` is the CACHED
     survivors⋈embeddings frame: k-means training makes ~7 eager passes
     over it (cell-sizing count, init collect, one assignment+means pass
-    per Lloyd iteration) which would otherwise each re-execute the full
-    upstream filter+dedup lineage in the one-shot pipeline. The caller
-    unpersists it once the stage output has been consumed.
+    per Lloyd iteration) which would otherwise each re-run the
+    embeddings scan and the join. The caller unpersists it once the
+    stage output has been materialized.
 
     The cached pass doubles as this stage's input contract: a
     duplicated vec_id pair has cosine 1.0, so the lower-priority copy
@@ -183,62 +182,14 @@ def _finalize(
     }
 
 
-def prepare_training_corpus(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    budget: int = 512,
-    jaccard_threshold: float = 0.5,
-    train_pct: int = 90,
-    salt: str = "corpus-v1",
-    semantic_threshold: "float | None" = None,
-    embedding_dim: int = 64,
-) -> dict[str, int]:
-    """Run the full preparation pipeline over ``sf_dir``/documents and
-    write train (packed) + eval (raw) parquet under ``out_dir``.
-
-    Returns stage counts: total -> after_filter -> after_near_dedup
-    (-> after_semantic when ``semantic_threshold`` is set — the
-    optional SemDeDup stage over ``sf_dir``/embeddings, see
-    ``_stage_semantic``), plus split sizes and packed-bin count.
-    Deterministic end to end (hash splits, fixed salts, canonical-min
-    survivors, deterministic k-means) — re-running yields
-    byte-identical artifacts.
-    """
-    docs, n_total = _stage_input_checked(spark, sf_dir)
-    kept = _stage_filtered(docs)
-    n_filtered = kept.count()
-    survivors = _stage_survivors(kept, jaccard_threshold)
-    n_deduped = survivors.count()
-    counts = {
-        "n_total": n_total,
-        "n_after_filter": n_filtered,
-        "n_after_near_dedup": n_deduped,
-    }
-    sem_cand = None
-    try:
-        if semantic_threshold is not None:
-            survivors, sem_cand = _stage_semantic(
-                spark, sf_dir, survivors, semantic_threshold, embedding_dim
-            )
-            counts["n_after_semantic"] = survivors.count()
-        clean = _stage_clean(survivors)
-        final = _finalize(spark, clean, out_dir, budget, train_pct, salt)
-    finally:
-        if sem_cand is not None:
-            # every action that reads the semantic stage has run (or
-            # failed) — unpersist in a finally so an exception in the
-            # clean/finalize stages cannot pin the cached
-            # survivors-join-embeddings frame for the session lifetime
-            sem_cand.unpersist()
-    return {**counts, **final}
-
-
 # ---------------------------------------------------------------------------
-# Resumable form: stage materialization + write-then-publish manifests
+# The stage chain: materialization + write-then-publish manifests
 # ---------------------------------------------------------------------------
 
 _MANIFEST = "_MANIFEST.json"
+# the audit count each stage's manifest "rows" is reported as
+_COUNT_KEYS = {"filtered": "n_after_filter", "survivors": "n_after_near_dedup",
+               "semantic": "n_after_semantic"}
 
 
 def _fingerprint(stage: str, params: dict, upstream: "str | None") -> str:
@@ -249,11 +200,6 @@ def _fingerprint(stage: str, params: dict, upstream: "str | None") -> str:
         {"stage": stage, "params": params, "upstream": upstream}, sort_keys=True
     )
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
-
-
-# moved to io/fsutil.py in round 6 so the protocol and its object-store
-# failure-mode shim (S3LikeFS) live together; alias kept for callers
-_StageFS = HadoopFS
 
 
 def _try_load_stage(spark: SparkSession, sfs: HadoopFS, stage_dir: str, fp: str):
@@ -273,16 +219,15 @@ def _try_load_stage(spark: SparkSession, sfs: HadoopFS, stage_dir: str, fp: str)
         return None
     try:
         m = sfs.read_json(mp)
-    except (ValueError, UnicodeDecodeError):
-        return None  # torn publish -> recompute + republish
     except Exception:
-        # Java-side read failures (Py4JJavaError: ChecksumException on
-        # checksummed filesystems, EOFException, ...) are the same
-        # verdict as a torn publish: the manifest cannot be trusted, so
-        # the stage reads as 'not done' and is recomputed+republished —
-        # NOT a wedge that crashes every resume until the file is
-        # hand-deleted (the rule ivf_index_load applies, adapted to
-        # this protocol's recompute semantics)
+        # a torn publish (ValueError/UnicodeDecodeError) and Java-side
+        # read failures (Py4JJavaError: ChecksumException on
+        # checksummed filesystems, EOFException, ...) get the same
+        # verdict: the manifest cannot be trusted, so the stage reads
+        # as 'not done' and is recomputed+republished — NOT a wedge
+        # that crashes every resume until the file is hand-deleted
+        # (the rule ivf_index_load applies, adapted to this protocol's
+        # recompute semantics)
         return None
     if m.get("fingerprint") != fp:
         return None
@@ -290,7 +235,7 @@ def _try_load_stage(spark: SparkSession, sfs: HadoopFS, stage_dir: str, fp: str)
 
 
 def _materialize_stage(
-    df: DataFrame, sfs: _StageFS, stage_dir: str, fp: str, extra: "dict | None" = None
+    df: DataFrame, sfs: HadoopFS, stage_dir: str, fp: str, extra: "dict | None" = None
 ) -> "tuple[DataFrame, dict]":
     """Write a stage's output and publish its manifest; returns the
     re-read frame (so downstream lineage starts at the parquet — the
@@ -304,8 +249,7 @@ def _materialize_stage(
     # no-op; overwrite covers remnants the delete's own listing missed.
     sfs.delete(stage_dir)  # stale/mismatched remnants
     df.write.mode("overwrite").parquet(stage_dir)
-    spark = df.sparkSession
-    out = spark.read.parquet(stage_dir)
+    out = df.sparkSession.read.parquet(stage_dir)
     manifest = {"fingerprint": fp, "rows": out.count(), **(extra or {})}
     sfs.write_json_atomic(stage_dir.rstrip("/") + "/" + _MANIFEST, manifest)
     return out, manifest
@@ -324,7 +268,9 @@ def prepare_training_corpus_resumable(
     semantic_threshold: "float | None" = None,
     embedding_dim: int = 64,
 ) -> dict:
-    """``prepare_training_corpus`` with per-stage restartability.
+    """Run the preparation pipeline over ``sf_dir``/documents with
+    per-stage restartability, writing train (packed) + eval (raw)
+    parquet under ``out_dir``.
 
     The expensive stages (``filtered``, ``survivors``, optionally
     ``semantic`` when ``semantic_threshold`` is set, ``clean``)
@@ -352,7 +298,10 @@ def prepare_training_corpus_resumable(
     all work); the atomic publish is rename-based — on object stores
     without atomic rename a crashed publish is simply re-done.
 
-    Returns the same counts as the one-shot form plus
+    Returns stage counts: total -> after_filter -> after_near_dedup
+    (-> after_semantic when ``semantic_threshold`` is set — the
+    optional SemDeDup stage over ``sf_dir``/embeddings, see
+    ``_stage_semantic``), plus split sizes and packed-bin count, and
     ``stages_reused`` / ``stages_computed`` — an audit of what the
     resume actually skipped.
 
@@ -364,96 +313,107 @@ def prepare_training_corpus_resumable(
     point of the publish window resumes to artifacts identical to an
     uninterrupted run).
     """
-    valid_stops = (None, "filtered", "survivors", "semantic", "clean")
-    if stop_after not in valid_stops:
-        raise ValueError(f"stop_after must be one of {valid_stops[1:]}, got {stop_after!r}")
-    if stop_after == "semantic" and semantic_threshold is None:
-        raise ValueError("stop_after='semantic' requires semantic_threshold")
-    stages_root = out_dir.rstrip("/") + "/_stages"
-    sfs = stage_fs if stage_fs is not None else HadoopFS(spark, out_dir)
-    sfs.mkdirs(stages_root)
-    reused: list[str] = []
-    computed: list[str] = []
 
-    fp_filtered = _fingerprint("filtered", {"sf_dir": sf_dir}, None)
-    d_filtered = stages_root + "/filtered"
-    loaded = _try_load_stage(spark, sfs, d_filtered, fp_filtered)
-    if loaded is None:
-        docs, n_total = _stage_input_checked(spark, sf_dir)
-        kept, m = _materialize_stage(
-            _stage_filtered(docs), sfs, d_filtered, fp_filtered,
-            extra={"n_total": n_total},
-        )
-        computed.append("filtered")
-    else:
-        kept, m = loaded
-        reused.append("filtered")
-    counts: dict = {"n_total": int(m["n_total"]), "n_after_filter": int(m["rows"])}
-    if stop_after == "filtered":
-        return {**counts, "stages_reused": reused, "stages_computed": computed}
+    def filtered(_):
+        kept, n_total = _stage_filtered(spark, sf_dir)
+        return kept, {"n_total": n_total}, None
 
-    fp_survivors = _fingerprint(
-        "survivors", {"jaccard_threshold": jaccard_threshold}, fp_filtered
-    )
-    d_survivors = stages_root + "/survivors"
-    loaded = _try_load_stage(spark, sfs, d_survivors, fp_survivors)
-    if loaded is None:
-        survivors, m = _materialize_stage(
-            _stage_survivors(kept, jaccard_threshold), sfs, d_survivors, fp_survivors
-        )
-        computed.append("survivors")
-    else:
-        survivors, m = loaded
-        reused.append("survivors")
-    counts["n_after_near_dedup"] = int(m["rows"])
-    if stop_after == "survivors":
-        return {**counts, "stages_reused": reused, "stages_computed": computed}
+    def semantic(survivors):
+        out, cand = _stage_semantic(spark, sf_dir, survivors, semantic_threshold, embedding_dim)
+        return out, None, cand
 
+    # (name, fingerprint params, build: upstream frame -> (frame,
+    # manifest extras, cached frame to unpersist once materialized))
+    chain = [
+        ("filtered", {"sf_dir": sf_dir}, filtered),
+        ("survivors", {"jaccard_threshold": jaccard_threshold},
+         lambda kept: (_stage_survivors(kept, jaccard_threshold), None, None)),
+    ]
     # Optional SemDeDup stage: chained AFTER survivors, so toggling or
     # re-thresholding it invalidates semantic+clean but reuses the
     # expensive text-dedup stages; with it off the clean fingerprint is
     # byte-identical to the pre-round-6 chain (old stage dirs resume).
-    fp_upstream = fp_survivors
     if semantic_threshold is not None:
-        fp_semantic = _fingerprint(
+        chain.append((
             "semantic",
             {"semantic_threshold": semantic_threshold, "embedding_dim": embedding_dim},
-            fp_survivors,
+            semantic,
+        ))
+    chain.append(("clean", {}, lambda survivors: (_stage_clean(survivors), None, None)))
+    names = tuple(name for name, _, _ in chain)
+    if stop_after is not None and stop_after not in names:
+        raise ValueError(
+            f"stop_after must be one of {names}, got {stop_after!r}"
+            " ('semantic' requires semantic_threshold)"
         )
-        d_semantic = stages_root + "/semantic"
-        loaded = _try_load_stage(spark, sfs, d_semantic, fp_semantic)
+    stages_root = out_dir.rstrip("/") + "/_stages"
+    sfs = stage_fs if stage_fs is not None else HadoopFS(spark, out_dir)
+    sfs.mkdirs(stages_root)
+    counts: dict = {}
+    reused: list[str] = []
+    computed: list[str] = []
+    frame, fp = None, None
+    for name, params, build in chain:
+        fp = _fingerprint(name, params, fp)
+        stage_dir = stages_root + "/" + name
+        loaded = _try_load_stage(spark, sfs, stage_dir, fp)
         if loaded is None:
-            sem_out, sem_cand = _stage_semantic(
-                spark, sf_dir, survivors, semantic_threshold, embedding_dim
-            )
+            df, extra, cached = build(frame)
             try:
-                survivors, m = _materialize_stage(
-                    sem_out, sfs, d_semantic, fp_semantic,
-                )
+                frame, m = _materialize_stage(df, sfs, stage_dir, fp, extra)
             finally:
                 # the stage output is parquet-backed (or the write
                 # failed) — either way the cache is done
-                sem_cand.unpersist()
-            computed.append("semantic")
+                if cached is not None:
+                    cached.unpersist()
+            computed.append(name)
         else:
-            survivors, m = loaded
-            reused.append("semantic")
-        counts["n_after_semantic"] = int(m["rows"])
-        fp_upstream = fp_semantic
-        if stop_after == "semantic":
+            frame, m = loaded
+            reused.append(name)
+        if name == "filtered":
+            counts["n_total"] = int(m["n_total"])
+        if name in _COUNT_KEYS:
+            counts[_COUNT_KEYS[name]] = int(m["rows"])
+        if stop_after == name:
             return {**counts, "stages_reused": reused, "stages_computed": computed}
 
-    fp_clean = _fingerprint("clean", {}, fp_upstream)
-    d_clean = stages_root + "/clean"
-    loaded = _try_load_stage(spark, sfs, d_clean, fp_clean)
-    if loaded is None:
-        clean, _ = _materialize_stage(_stage_clean(survivors), sfs, d_clean, fp_clean)
-        computed.append("clean")
-    else:
-        clean, _ = loaded
-        reused.append("clean")
-    if stop_after == "clean":
-        return {**counts, "stages_reused": reused, "stages_computed": computed}
-
-    final = _finalize(spark, clean, out_dir, budget, train_pct, salt)
+    final = _finalize(spark, frame, out_dir, budget, train_pct, salt)
     return {**counts, **final, "stages_reused": reused, "stages_computed": computed}
+
+
+def prepare_training_corpus(
+    spark: SparkSession,
+    sf_dir: str,
+    out_dir: str,
+    budget: int = 512,
+    jaccard_threshold: float = 0.5,
+    train_pct: int = 90,
+    salt: str = "corpus-v1",
+    semantic_threshold: "float | None" = None,
+    embedding_dim: int = 64,
+) -> dict[str, int]:
+    """Run the full preparation pipeline over ``sf_dir``/documents and
+    write train (packed) + eval (raw) parquet under ``out_dir``.
+
+    The resumable chain with nothing to resume: each stage runs once
+    into a scratch ``out_dir``/_stages, deleted before the run and when
+    it ends or fails. Its input need not be immutable, so it never
+    loads an earlier run's stages; it CLEARS a resumable run's
+    ``_stages`` in the same ``out_dir``.
+
+    Returns the counts of ``prepare_training_corpus_resumable`` without
+    ``stages_reused`` / ``stages_computed``. Deterministic end to end
+    (hash splits, fixed salts, canonical-min survivors, deterministic
+    k-means) — re-running yields byte-identical artifacts.
+    """
+    sfs = HadoopFS(spark, out_dir)
+    stages_root = out_dir.rstrip("/") + "/_stages"
+    sfs.delete(stages_root)
+    try:
+        counts = prepare_training_corpus_resumable(
+            spark, sf_dir, out_dir, budget, jaccard_threshold, train_pct, salt,
+            stage_fs=sfs, semantic_threshold=semantic_threshold, embedding_dim=embedding_dim,
+        )
+    finally:
+        sfs.delete(stages_root)
+    return {k: v for k, v in counts.items() if not k.startswith("stages_")}

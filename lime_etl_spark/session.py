@@ -21,18 +21,60 @@ SparkSession builder. Every knob here exists for 100 TB posture:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _local_cpus(raw: str) -> int:
+    """``SPARK_GRAFT_CPUS``: an integer >= 1; anything else raises
+    instead of falling back to a default."""
+    if not re.fullmatch(r"[0-9]+", raw) or int(raw) < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be an integer >= 1, got {raw!r}")
+    return int(raw)
+
+
+def _local_driver_mem(raw: "str | None", mem_total: "int | None" = None) -> str:
+    """``SPARK_GRAFT_DRIVER_MEM``: ``<int>[kmgt]`` (e.g. ``3g``, either
+    case, as Spark reads it); a malformed value raises. Unset, it is a
+    quarter of physical RAM (``mem_total`` bytes; default: the host's,
+    which on Linux is /proc/meminfo MemTotal), at least 1 GiB — a
+    128 GiB host gets 32g, a 16 GiB host 4g."""
+    if raw is None:
+        if mem_total is None:
+            mem_total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        return f"{max(1024, mem_total // 2**20 // 4)}m"
+    if not re.fullmatch(r"[0-9]+[kmgt]", raw, re.IGNORECASE) or int(raw[:-1]) < 1:
+        raise ValueError(
+            f"SPARK_GRAFT_DRIVER_MEM must be <int>[kmgt] (e.g. 3g), got {raw!r}"
+        )
+    return raw
+
+
+DEFAULT_SHUFFLE_PARTITIONS = _local_cpus(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # local[N] runs driver + all N executor threads in ONE JVM, so the
 # default 1g driver heap is the whole engine's memory — enough for
 # sf0.1, but the sf1 scale rehearsal (6M lineitem rows, ~1e8-row
 # shuffles) dies in GC (GCLocker allocation retries) long before the
-# 128 GiB host is touched. Size the local heap explicitly; on a real
-# cluster spark-submit owns executor memory and this knob is inert.
-DEFAULT_LOCAL_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+# 128 GiB host is touched. Size the local heap explicitly, from the
+# host unless SPARK_GRAFT_DRIVER_MEM says otherwise (a fixed 32g let
+# one test JVM take 8.5 GB RSS of a 15 GB host); on a real cluster
+# spark-submit owns executor memory and this knob is inert.
+DEFAULT_LOCAL_DRIVER_MEM = _local_driver_mem(os.environ.get("SPARK_GRAFT_DRIVER_MEM"))
+
+
+def _heap_floor(heap: str) -> str:
+    """-Xms for timing runs: 8g, or the whole heap when that is smaller
+    — a floor above -Xmx stops the JVM at start."""
+    mib = int(heap[:-1]) * {"k": 2**-10, "m": 1, "g": 2**10, "t": 2**20}[heap[-1].lower()]
+    return "8g" if mib >= 8192 else heap
+
+
+# Driver JVM options of the timing scripts (bench.py and tools/):
+# G1 with a fixed heap floor, so heap-growth pauses do not land in
+# whichever query is running.
+TIMING_JAVA_OPTIONS = f"-XX:+UseG1GC -Xms{_heap_floor(DEFAULT_LOCAL_DRIVER_MEM)}"
 
 
 def _was_submitted() -> bool:

@@ -21,9 +21,9 @@ names = sys.argv[4:]
 sys.path.insert(0, repo)
 
 from lime_etl_spark.registry import REGISTRY  # noqa: E402
-from lime_etl_spark.session import get_spark  # noqa: E402
+from lime_etl_spark.session import TIMING_JAVA_OPTIONS, get_spark  # noqa: E402
 
-spark = get_spark("ab-time", extra_conf={"spark.driver.extraJavaOptions": "-XX:+UseG1GC -Xms8g"})
+spark = get_spark("ab-time", extra_conf={"spark.driver.extraJavaOptions": TIMING_JAVA_OPTIONS})
 spark.sparkContext.setLogLevel("ERROR")
 spark.range(1_000_000).selectExpr("sum(id) s").write.format("noop").mode("overwrite").save()
 

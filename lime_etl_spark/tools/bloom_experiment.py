@@ -42,12 +42,12 @@ def run_mode(bloom_on: bool) -> dict:
     # fresh JVM confs per mode where possible; runtime SQL confs are
     # enough for the optimizer flags below (all runtime-settable)
     from lime_etl_spark.registry import REGISTRY
-    from lime_etl_spark.session import get_spark
+    from lime_etl_spark.session import TIMING_JAVA_OPTIONS, get_spark
 
     spark = get_spark(
         f"bloom-{'on' if bloom_on else 'off'}",
         extra_conf={
-            "spark.driver.extraJavaOptions": "-XX:+UseG1GC -Xms8g",
+            "spark.driver.extraJavaOptions": TIMING_JAVA_OPTIONS,
             "spark.sql.autoBroadcastJoinThreshold": "-1",
             "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
             "spark.sql.optimizer.runtime.bloomFilter.enabled": str(bloom_on).lower(),

@@ -24,12 +24,12 @@ sys.path.insert(0, repo)
 from pyspark.sql import functions as F  # noqa: E402
 
 from lime_etl_spark.ops import dedup  # noqa: E402
-from lime_etl_spark.session import get_spark  # noqa: E402
+from lime_etl_spark.session import TIMING_JAVA_OPTIONS, get_spark  # noqa: E402
 
 spark = get_spark(
     "lsh-skew-bench",
     extra_conf={
-        "spark.driver.extraJavaOptions": "-XX:+UseG1GC -Xms8g",
+        "spark.driver.extraJavaOptions": TIMING_JAVA_OPTIONS,
         # the point of this bench is the per-task distribution (is one
         # task doing the whole bucket's k^2 emission?) — enable the UI
         # so the REST API can report max task duration per stage

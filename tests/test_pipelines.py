@@ -145,9 +145,14 @@ def test_prepare_training_corpus_end_to_end(spark, sf_dir, tmp_path):
     """Capstone pipeline: filter -> near-dedup -> span dedup -> redact
     -> split -> pack -> clustered write. Counts are monotone through
     the gates, artifacts readable, and the run is deterministic."""
+    import os
+
     from pyspark.sql import functions as F
 
-    from lime_etl_spark.pipelines.corpus import prepare_training_corpus
+    from lime_etl_spark.pipelines.corpus import (
+        prepare_training_corpus,
+        prepare_training_corpus_resumable,
+    )
 
     out = str(tmp_path / "corpus")
     c = prepare_training_corpus(spark, sf_dir, out, budget=256)
@@ -157,18 +162,35 @@ def test_prepare_training_corpus_end_to_end(spark, sf_dir, tmp_path):
     train = spark.read.parquet(f"{out}/train")
     assert train.columns == ["pack_bin", "n_docs", "total_tokens", "packed_text"]
     assert train.agg(F.sum("n_docs")).collect()[0][0] == c["n_train_docs"]
-    # deterministic: second run to a fresh dir yields identical artifacts
+    # deterministic: a second run yields identical artifacts — and it
+    # never resumes. Plant a resumable run's stages in its out_dir with
+    # a truncated 'filtered' parquet under a still-valid manifest: a
+    # one-shot that loaded it would report 10 filtered docs.
     out2 = str(tmp_path / "corpus2")
+    prepare_training_corpus_resumable(spark, sf_dir, out2, budget=256, stop_after="survivors")
+    filtered = os.path.join(out2, "_stages", "filtered")
+    head = spark.read.parquet(filtered).limit(10).toPandas()
+    for name in os.listdir(filtered):
+        if not name.startswith("_MANIFEST"):
+            os.remove(os.path.join(filtered, name))
+    head.to_parquet(os.path.join(filtered, "part-00000.parquet"), index=False)
+    assert spark.read.parquet(filtered).count() == 10
     c2 = prepare_training_corpus(spark, sf_dir, out2, budget=256)
     assert c2 == c
-    t1 = sorted(map(tuple, train.collect()))
-    t2 = sorted(map(tuple, spark.read.parquet(f"{out2}/train").collect()))
-    assert t1 == t2
+    for sub in ("train", "eval"):
+        t1 = sorted(map(tuple, spark.read.parquet(f"{out}/{sub}").collect()))
+        t2 = sorted(map(tuple, spark.read.parquet(f"{out2}/{sub}").collect()))
+        assert t1 == t2, sub
+    assert sorted(os.listdir(out2)) == ["eval", "train"]
 
 
 def test_prepare_training_corpus_rejects_corrupt_input(spark, tmp_path):
     """doc_id is the identity every stage keys on — a duplicated id
-    must stop the pipeline at the door, not corrupt dedup/split/pack."""
+    must stop the pipeline at the door, not corrupt dedup/split/pack —
+    and the failed one-shot leaves no stage dir behind, not even one
+    that was there before it started."""
+    import os
+
     import pytest
 
     from lime_etl_spark.pipelines.corpus import prepare_training_corpus
@@ -179,8 +201,30 @@ def test_prepare_training_corpus_rejects_corrupt_input(spark, tmp_path):
     )
     src = str(tmp_path / "src")
     bad.coalesce(1).write.parquet(src + "/documents.parquet")
+    out = tmp_path / "out"
+    (out / "_stages" / "filtered").mkdir(parents=True)
     with pytest.raises(ValueError, match="quality gate failed"):
-        prepare_training_corpus(spark, src, str(tmp_path / "out"))
+        prepare_training_corpus(spark, src, str(out))
+    assert not os.path.exists(out / "_stages")
+
+
+def test_prepare_corpus_cli_oneshot_and_resumable(spark, sf_dir, tmp_path, capsys):
+    """`prepare-corpus` runs both forms: they print the same counts,
+    and only the resumable one prints its stage audit."""
+    from lime_etl_spark.__main__ import main
+
+    def run(*extra):
+        assert main(["prepare-corpus", "--sf-dir", sf_dir, *extra]) == 0
+        return capsys.readouterr().out.splitlines()
+
+    oneshot = run("--out", str(tmp_path / "a"))
+    resumable = run("--out", str(tmp_path / "b"), "--resumable")
+    assert oneshot and not any(line.startswith("stages_") for line in oneshot)
+    assert [line for line in resumable if not line.startswith("stages_")] == oneshot
+    assert [line.split()[0] for line in resumable if line.startswith("stages_")] == [
+        "stages_reused",
+        "stages_computed",
+    ]
 
 
 def test_corpus_resumable_resumes_and_matches_oneshot(spark, sf_dir, tmp_path):

@@ -162,6 +162,40 @@ def test_was_submitted_detects_pre_gateway_spark_submit(monkeypatch):
     assert _was_submitted()
 
 
+def test_local_session_sizing_from_env_and_host():
+    """SPARK_GRAFT_CPUS / SPARK_GRAFT_DRIVER_MEM parse strictly — a
+    malformed value raises, never a silent default — and an unset
+    driver memory is a quarter of RAM, at least 1 GiB. Pure parsing:
+    starts no session."""
+    import pytest
+
+    from lime_etl_spark.session import _heap_floor, _local_cpus, _local_driver_mem
+
+    assert _local_cpus("1") == 1 and _local_cpus("32") == 32
+    for bad in ("0", "-2", "4.0", "four", "", " 4"):
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            _local_cpus(bad)
+
+    for ok in ("3g", "3G", "512m", "1t", "4096k"):
+        assert _local_driver_mem(ok) == ok
+    for bad in ("3", "g", "3gb", "3.5g", "0g", " 3g", "-1g", ""):
+        with pytest.raises(ValueError, match="SPARK_GRAFT_DRIVER_MEM"):
+            _local_driver_mem(bad)
+
+    gib = 2**30
+    assert _local_driver_mem(None, 128 * gib) == "32768m"
+    assert _local_driver_mem(None, 15 * gib) == "3840m"
+    assert _local_driver_mem(None, 2 * gib) == "1024m"  # floor: 1 GiB
+    host = _local_driver_mem(None)
+    assert host.endswith("m") and int(host[:-1]) >= 1024
+
+    # the timing tools' -Xms floor never exceeds the heap (-Xms > -Xmx
+    # stops the JVM at start)
+    assert _heap_floor("32768m") == _heap_floor("1t") == _heap_floor("8G") == "8g"
+    assert _heap_floor("3840m") == "3840m" and _heap_floor("4g") == "4g"
+    assert _heap_floor("4194304k") == "4194304k"
+
+
 def test_gencheck_canon_and_compare_primitives():
     """The generative harness's exactness primitives: full-precision
     hex floats, scale-insensitive Decimal normalization (Spark
