@@ -262,6 +262,26 @@ class LimeSurveyClient:
 # ---------------------------------------------------------------------------
 
 
+def checked_page_size(size: int, option: str) -> int:
+    """``size`` if it is at least 1, else ``ValueError`` naming the
+    option it came from: a smaller page size would plan no pages, or
+    cut rows off the end of each stream read."""
+    if size < 1:
+        raise ValueError(f"{option} must be an integer >= 1, got {size}")
+    return size
+
+
+def response_id_pages(max_response_id: int, page_size: int) -> list[tuple[int, int]]:
+    """Inclusive ``(from_id, to_id)`` ranges of ``page_size`` ids that
+    cover response ids 1..max_response_id; the last page ends at
+    max_response_id."""
+    size = checked_page_size(page_size, "page_size")
+    return [
+        (lo, min(lo + size - 1, max_response_id))
+        for lo in range(1, max_response_id + 1, size)
+    ]
+
+
 def extract_responses_df(
     spark: SparkSession,
     client: LimeSurveyClient,
@@ -298,10 +318,7 @@ def extract_responses_partitioned(
     """
     import pandas as pd
 
-    pages = [
-        (i, min(i + page_size - 1, max_response_id))
-        for i in range(1, max_response_id + 1, page_size)
-    ]
+    pages = response_id_pages(max_response_id, page_size)
     pages_df = spark.createDataFrame(pages, "from_id BIGINT, to_id BIGINT").repartition(
         max(1, min(len(pages), 64))
     )

@@ -36,6 +36,8 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from lime_etl_spark.io.limesurvey import checked_page_size, response_id_pages
+
 
 class LimeSurveyDataSource(DataSource):
     @classmethod
@@ -72,11 +74,12 @@ class LimeSurveyReader(DataSourceReader):
             with open(replay, encoding="utf-8") as fh:
                 n_pages = len(json.load(fh))
             return [_Page(None, None, i) for i in range(n_pages)]
-        max_id = int(self.options["max_response_id"])
-        page = int(self.options.get("page_size", "5000"))
         return [
-            _Page(lo, min(lo + page - 1, max_id), None)
-            for lo in range(1, max_id + 1, page)
+            _Page(lo, hi, None)
+            for lo, hi in response_id_pages(
+                int(self.options["max_response_id"]),
+                int(self.options.get("page_size", "5000")),
+            )
         ]
 
     def read(self, partition: _Page) -> Iterator[tuple]:
@@ -129,7 +132,9 @@ class LimeSurveyStreamReader(SimpleDataSourceStreamReader):
 
     def __init__(self, options: dict):
         self.options = options
-        self.page = int(options.get("stream_page_size", "1000"))
+        self.page = checked_page_size(
+            int(options.get("stream_page_size", "1000")), "stream_page_size"
+        )
 
     def initialOffset(self) -> dict:
         return {"last_id": int(self.options.get("start_after_id", "0"))}
@@ -160,8 +165,8 @@ class LimeSurveyStreamReader(SimpleDataSourceStreamReader):
                 # O(log gap) exports, and a truly idle survey still
                 # returns the same offset (immediate availableNow
                 # quiesce) at the cost of a few cheap empty exports.
-                width = max(1, self.page)
-                cap = max(1, self.page) << 20
+                width = self.page
+                cap = self.page << 20
                 while True:
                     payload = client.export_responses(
                         int(self.options["sid"]),

@@ -25,17 +25,17 @@ Design (foreachBatch over a document stream):
    smaller id. ``dup_of`` is the smallest matched id, ``best_jaccard``
    the highest verified score. Survivors — docs that matched nothing
    earlier — are appended to the state (bands + doc store).
-4. Exactly-once: every write (decisions, bands, doc store) is a
-   dynamic partition overwrite keyed on the micro-batch id
-   (io/sinks.idempotent_reload), so a replayed batch rewrites its own
-   partitions instead of double-appending. Arrival order (the priority
-   between batches, rule 3) includes the batch decomposition, which is
-   NOT crash-stable: a driver killed between the file-source's
-   per-batch log write and the offsets-WAL write makes the restarted
-   stream merge the orphaned file set with the next batch (Spark file
-   source semantics) — decisions under the merged arrival order are
-   valid; exactly-once/no-loss hold regardless (pinned by
-   tests/test_streaming_restart.py's decomposition-aware equivalence).
+4. Exactly-once: the batch commits through streaming/state.commit_batch
+   (its docstring holds the write order and why), so a replayed batch
+   rewrites its own partitions instead of double-appending. Arrival
+   order (the priority between batches, rule 3) includes the batch
+   decomposition, which is NOT crash-stable: a driver killed between
+   the file-source's per-batch log write and the offsets-WAL write
+   makes the restarted stream merge the orphaned file set with the
+   next batch (Spark file source semantics) — decisions under the
+   merged arrival order are valid; exactly-once/no-loss hold
+   regardless (pinned by tests/test_streaming_restart.py's
+   decomposition-aware equivalence).
 
 Scale posture: all joins are keyed ((band, bkey), ids) — no cartesian
 anywhere; the state index join shuffles the BATCH (small) against the
@@ -67,8 +67,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from lime_etl_spark.io import sinks
-from lime_etl_spark.streaming.state import _Pin, decision_guard
+from lime_etl_spark.streaming.state import _Pin, commit_batch, decision_guard
 from lime_etl_spark.streaming.state import read_state_or_empty as _read_or_empty
 from lime_etl_spark.ops import dedup
 
@@ -144,15 +143,13 @@ def process_batch(
     # review; found here by the round-8 generative dedup_ingest family.
     # The current batch's own partition is excluded, so a REPLAYED batch
     # re-decides identically (partition overwrite converges).
-    decisions_path = os.path.join(state_dir, DECISIONS_SUBDIR)
     # every mode routes through DecisionIdGuard (round-10): disk — and
     # auto before its measured crossover — reproduces the round-8
     # per-batch read INSIDE the guard (state._disk_prior_ids builds the
     # identical plan); auto past its crossover uses the amortized exact
     # broadcast probe + tiny increment joins, and bloom the bitset
-    # screen + exact confirm. record() is a no-op on the disk path, so
-    # the call below is mode-agnostic.
-    guard = decision_guard(decisions_path, "doc_id")
+    # screen + exact confirm.
+    guard = decision_guard(os.path.join(state_dir, DECISIONS_SUBDIR), "doc_id")
     guarded = guard.filter_prior(new_docs, batch_id)
     # eager localCheckpoint, NOT cache(): in disk mode this frame embeds
     # a scan of the decisions dir that this very batch then OVERWRITES —
@@ -168,155 +165,72 @@ def process_batch(
     new_docs_pin = _Pin(guarded)
     new_docs = new_docs_pin.df
     new_bands = dedup.minhash_bands(new_docs).cache()
-
     try:
-        _process_batch_inner(
-            spark, new_docs, new_bands, batch_id, state_dir, threshold, guard
+        state_bands = _read_or_empty(
+            spark, os.path.join(state_dir, BANDS_SUBDIR), _BANDS_SCHEMA
+        ).drop("ingest_batch")
+        state_docs = _read_or_empty(
+            spark, os.path.join(state_dir, DOCS_SUBDIR), _DOCS_SCHEMA
+        ).drop("ingest_batch")
+
+        # candidates: new-vs-accepted (state id first) + new-vs-new
+        # (smaller id first) — the "earlier identity" each new doc must
+        # beat. s.id != n.id: on a batch REPLAY the replayed docs are
+        # already in the state — they must not pair with themselves (a
+        # self-pair also poisons the Jaccard denominator via duplicated
+        # index rows)
+        vs_state = (
+            new_bands.alias("n")
+            .join(
+                state_bands.alias("s"),
+                (F.col("n.band") == F.col("s.band"))
+                & (F.col("n.bkey") == F.col("s.bkey"))
+                & (F.col("s.id") != F.col("n.id")),
+            )
+            .select(F.col("s.id").alias("id_a"), F.col("n.id").alias("id_b"))
+        )
+        a, b = new_bands.alias("a"), new_bands.alias("b")
+        vs_batch = a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bkey") == F.col("b.bkey"))
+            & (F.col("a.id") < F.col("b.id")),
+        ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        cands = vs_state.union(vs_batch).distinct()
+
+        # batch version wins on id collision (replay): a doc must appear
+        # in the verification corpus exactly once or set sizes
+        # double-count
+        corpus = new_docs.union(
+            state_docs.join(new_docs.select("doc_id"), "doc_id", "left_anti")
+        )
+        verified = dedup.ngram_jaccard_pairs(
+            corpus, threshold=threshold, pairs=cands
+        ).select("id_a", "id_b", "jaccard")
+        matches = verified.groupBy(F.col("id_b").alias("doc_id")).agg(
+            F.min("id_a").alias("dup_of"),
+            F.max("jaccard").alias("best_jaccard"),
+        )
+        decisions = (
+            new_docs.select("doc_id")
+            .join(matches, "doc_id", "left")
+            .select(
+                "doc_id",
+                F.col("dup_of").isNotNull().alias("is_dup"),
+                "dup_of",
+                "best_jaccard",
+            )
+        )
+        commit_batch(
+            spark, state_dir, batch_id, guard, decisions,
+            [
+                (BANDS_SUBDIR, "id", new_bands, state_bands, None),
+                (DOCS_SUBDIR, "doc_id", new_docs, state_docs, None),
+            ],
         )
     finally:
         new_bands.unpersist()
         new_docs_pin.release()
-
-
-def _process_batch_inner(
-    spark, new_docs, new_bands, batch_id, state_dir, threshold, guard=None
-) -> None:
-    state_bands = _read_or_empty(
-        spark, os.path.join(state_dir, BANDS_SUBDIR), _BANDS_SCHEMA
-    ).drop("ingest_batch")
-    state_docs = _read_or_empty(
-        spark, os.path.join(state_dir, DOCS_SUBDIR), _DOCS_SCHEMA
-    ).drop("ingest_batch")
-
-    # candidates: new-vs-accepted (state id first) + new-vs-new (smaller
-    # id first) — the "earlier identity" each new doc must beat
-    # s.id != n.id: on a batch REPLAY the replayed docs are already in
-    # the state — they must not pair with themselves (a self-pair also
-    # poisons the Jaccard denominator via duplicated index rows)
-    vs_state = (
-        new_bands.alias("n")
-        .join(
-            state_bands.alias("s"),
-            (F.col("n.band") == F.col("s.band"))
-            & (F.col("n.bkey") == F.col("s.bkey"))
-            & (F.col("s.id") != F.col("n.id")),
-        )
-        .select(F.col("s.id").alias("id_a"), F.col("n.id").alias("id_b"))
-    )
-    a, b = new_bands.alias("a"), new_bands.alias("b")
-    vs_batch = a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bkey") == F.col("b.bkey"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    cands = vs_state.union(vs_batch).distinct()
-
-    # batch version wins on id collision (replay): a doc must appear in
-    # the verification corpus exactly once or set sizes double-count
-    corpus = new_docs.union(
-        state_docs.join(new_docs.select("doc_id"), "doc_id", "left_anti")
-    )
-    verified = dedup.ngram_jaccard_pairs(
-        corpus, threshold=threshold, pairs=cands
-    ).select("id_a", "id_b", "jaccard")
-
-    matches = verified.groupBy(F.col("id_b").alias("doc_id")).agg(
-        F.min("id_a").alias("dup_of"),
-        F.max("jaccard").alias("best_jaccard"),
-    )
-    # eager pin BEFORE the write: the plan may read the decisions dir
-    # (the prior-decision anti-join, in disk-guard mode) and the write
-    # REPLACES partitions of that same dir — a lazy plan lists/reads
-    # the dir DURING the overwrite commit and dies FAILED_READ_FILE
-    # on a part file the commit just swapped (hit by the empty-batch
-    # test the moment the prior-ids guard landed). The frame is
-    # batch-sized, so pinning it is one tiny job per micro-batch;
-    # blocks are released deterministically at the end of the batch.
-    decisions_pin = _Pin(
-        new_docs.select("doc_id")
-        .join(matches, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("dup_of").isNotNull().alias("is_dup"),
-            "dup_of",
-            "best_jaccard",
-        )
-        .withColumn("ingest_batch", F.lit(batch_id))
-    )
-    pins = [decisions_pin]
-    try:
-        _write_state(
-            spark, decisions_pin, new_docs, new_bands, batch_id, state_dir,
-            guard, pins,
-        )
-    finally:
-        for p in pins:
-            p.release()
-
-
-def _write_state(
-    spark, decisions_pin, new_docs, new_bands, batch_id, state_dir, guard, pins
-) -> None:
-    state_bands = _read_or_empty(
-        spark, os.path.join(state_dir, BANDS_SUBDIR), _BANDS_SCHEMA
-    ).drop("ingest_batch")
-    state_docs = _read_or_empty(
-        spark, os.path.join(state_dir, DOCS_SUBDIR), _DOCS_SCHEMA
-    ).drop("ingest_batch")
-    sinks.idempotent_reload(
-        decisions_pin.df, os.path.join(state_dir, DECISIONS_SUBDIR), "ingest_batch"
-    )
-
-    # survivors extend the state; duplicates are dropped at the door.
-    # Schema'd read, not inference: an EMPTY micro-batch (a continuous
-    # rate/file source can trigger with zero rows) writes a decisions
-    # partition holding only _SUCCESS, and the next batch's inference
-    # over the dir then fails with UNABLE_TO_INFER_SCHEMA — found by
-    # the round-4 continuous-trigger soak; availableNow drains never
-    # produce an empty batch so the gate suite couldn't see it.
-    survivor_ids = (
-        _read_or_empty(spark, os.path.join(state_dir, DECISIONS_SUBDIR), _DECISIONS_SCHEMA)
-        .filter((F.col("ingest_batch") == batch_id) & ~F.col("is_dup"))
-        .select("doc_id")
-    )
-    # left_anti vs the existing state: on a batch REPLAY the survivors
-    # are already stored under this batch's partitions — the anti-join
-    # empties the append and the dynamic partition overwrite then
-    # touches NO partitions, so the first attempt's state stands
-    # (same mechanism as streaming/semantic.py's member append)
-    # both appends read their own target dir (the replay anti-join) —
-    # same read-under-overwrite hazard as decisions: pin eagerly first
-    bands_pin = _Pin(
-        new_bands.join(
-            survivor_ids.withColumnRenamed("doc_id", "id"), "id", "left_semi"
-        )
-        # no distinct() on the anti-join's right side: existence checks
-        # tolerate duplicates, and a distinct over the corpus-scale band
-        # index would add a full shuffle per micro-batch
-        .join(state_bands.select("id"), "id", "left_anti")
-        .withColumn("ingest_batch", F.lit(batch_id))
-    )
-    pins.append(bands_pin)
-    sinks.idempotent_reload(
-        bands_pin.df, os.path.join(state_dir, BANDS_SUBDIR), "ingest_batch"
-    )
-    docs_pin = _Pin(
-        new_docs.join(survivor_ids, "doc_id", "left_semi")
-        .join(state_docs.select("doc_id"), "doc_id", "left_anti")
-        .withColumn("ingest_batch", F.lit(batch_id))
-    )
-    pins.append(docs_pin)
-    sinks.idempotent_reload(
-        docs_pin.df, os.path.join(state_dir, DOCS_SUBDIR), "ingest_batch"
-    )
-    # ONLY after every write above succeeded: a crash between the
-    # decisions write and here leaves the increment unrecorded, so
-    # the replay re-decides the batch (instead of the guard hiding
-    # the ids and the replay skipping the bands/docs writes that
-    # never happened — the crash-convergence contract). record() is a
-    # no-op on the disk path, so the call is mode-agnostic.
-    guard.record(spark, batch_id, decisions_pin.df.select("doc_id"))
 
 
 def dedup_on_ingest(

@@ -29,13 +29,12 @@ Design (foreachBatch over an embedding stream):
    empty state equals batch semantic_dedup row-for-row; pinned in
    tests). ``dup_of`` = the highest-cosine such neighbor (ties: lowest
    id), ``best_cos`` its score.
-4. Exactly-once: decisions and member appends are dynamic partition
-   overwrites keyed on the micro-batch id (io/sinks.idempotent_reload)
-   — a replayed batch rewrites its own partitions. The state join
-   excludes self-pairs (replayed docs are already members), and a
-   vec_id re-delivered in a LATER batch is never re-appended to the
-   member state (left_anti on existing member ids), so member ids stay
-   unique.
+4. Exactly-once: the batch commits through streaming/state.commit_batch
+   (its docstring holds the write order and why), so a replayed batch
+   rewrites its own partitions and a vec_id re-delivered in a LATER
+   batch is never re-appended to the member state — member ids stay
+   unique. The state join excludes self-pairs (replayed docs are
+   already members).
 
 Departure from batch semantics, inherent to at-ingest dedup: a vector
 DROPPED in an earlier batch cannot veto later arrivals (only accepted
@@ -77,14 +76,13 @@ from pyspark.sql.window import Window
 
 from lime_etl_spark.plans import auto_broadcast
 
-from lime_etl_spark.io import sinks
 from lime_etl_spark.ops.similarity import (
     _assign_cluster,
     _dot,
     _gnorm,
     _to_double,
 )
-from lime_etl_spark.streaming.state import _Pin, decision_guard
+from lime_etl_spark.streaming.state import _Pin, commit_batch, decision_guard
 from lime_etl_spark.streaming.state import read_state_or_empty as _read_or_empty
 
 MEMBERS_SUBDIR = "members"
@@ -169,194 +167,136 @@ def process_batch(
         .withColumn(
             "rk", F.row_number().over(Window.partitionBy("cluster").orderBy(*order))
         )
-        # cached for the batch: decisions + member append + the two
-        # candidate joins below would otherwise re-run the Arrow
-        # assignment kernel ~4x; unpersisted in the finally
+        # cached for the batch: the bloom guard's candidate pass and the
+        # pin below would otherwise each re-run the Arrow assignment
+        # kernel; unpersisted in the finally
         .cache()
     )
+    ranked_pin = None
     try:
-        _process_batch_inner(spark, ranked, batch_id, state_dir, threshold)
+        # REPLAY idempotence is subtler than the self-pair exclusion
+        # alone: on a replayed batch the state already holds this
+        # batch's first-attempt SURVIVORS, so a replayed vector x also
+        # pairs (via vs_state) with lower-priority batch-mates that
+        # survived — pairs the upper-triangular batch rule never scores.
+        # Those pairs cannot veto x because survivors are pairwise BELOW
+        # the threshold by construction (if cos(a,b) >= t the
+        # lower-priority one was dropped), so the replayed decisions are
+        # identical — pinned by test_replayed_batch_is_idempotent.
+        members = _read_or_empty(
+            spark, os.path.join(state_dir, MEMBERS_SUBDIR), _MEMBERS_SCHEMA
+        ).drop("ingest_batch")
+
+        # one decision per vec_id EVER: a vec_id re-delivered in a LATER
+        # batch (cross-batch at-least-once delivery) must not get a
+        # second decision row — the member-state anti-join alone
+        # protected only the members invariant, while decisions/ would
+        # carry the id under two ingest_batch partitions (round-7 review
+        # finding). Prior decisions from OTHER batches exclude the
+        # re-delivery; the current batch's own partition is about to be
+        # overwritten (replay-safe). Every mode routes through
+        # DecisionIdGuard (round-10): disk — and auto before its
+        # measured crossover — reproduces the round-8 per-batch read
+        # INSIDE the guard; auto past its crossover uses the amortized
+        # exact broadcast probe + increment joins, and bloom the bitset
+        # screen + exact confirm.
+        guard = decision_guard(os.path.join(state_dir, DECISIONS_SUBDIR), "vec_id")
+        # pin the guarded batch ONCE (round-10 advice): the two pair
+        # joins, the decisions build, and the member append all consume
+        # it — unpinned, each re-executes the guard's Arrow probe and
+        # the per-increment anti-joins (~4x per micro-batch), and in
+        # disk mode re-scans the decisions dir this very batch
+        # overwrites. Mirrors dedup.py's _Pin(guarded); batch-sized.
+        ranked_pin = _Pin(guard.filter_prior(ranked, batch_id))
+        guarded = ranked_pin.df
+
+        pair_cos = F.round(
+            _dot(F.col("ea"), F.col("eb"))
+            / (_gnorm(F.col("ea")) * _gnorm(F.col("eb"))),
+            6,
+        )
+        # Prune the member-state read to the batch's own cells
+        # (round-11, guide §6 predicate pushdown): a micro-batch touches
+        # at most n_clusters cells and the centroid matrix is already
+        # driver-held, so collecting the batch's distinct clusters is a
+        # contract-bounded driver transfer (≤ k ints); the IN filter
+        # pushes down to the members parquet scan, making the per-batch
+        # state read cost proportional to the touched cells instead of
+        # the whole accepted corpus. Equivalence: vs_state joins on
+        # cluster, so members of untouched cells can never pair with a
+        # batch row. (The member append's vec_id anti-join deliberately
+        # stays unpruned — a re-delivered id may hash to a different
+        # cell if its embedding changed, and that invariant is
+        # corpus-wide.)
+        batch_clusters = [
+            r[0] for r in guarded.select("cluster").distinct().collect()
+        ]
+        # vs accepted members of the same cell (self-pairs excluded: on
+        # a batch replay the replayed vectors are already members)
+        vs_state = (
+            members.filter(F.col("cluster").isin(batch_clusters))
+            .select(
+                "cluster", F.col("vec_id").alias("id_a"), F.col("e").alias("ea")
+            )
+            .join(
+                guarded.select(
+                    "cluster", F.col("vec_id").alias("id_b"), F.col("e").alias("eb")
+                ),
+                "cluster",
+            )
+            .filter(F.col("id_a") != F.col("id_b"))
+            .select("id_b", "id_a", pair_cos.alias("cos"))
+        )
+        # vs higher-priority batch-mates — upper-triangular on the batch
+        # rank (kept or dropped may veto), so one batch == batch semantics
+        a = guarded.select(
+            "cluster", F.col("rk").alias("rk_a"), F.col("vec_id").alias("id_a"),
+            F.col("e").alias("ea"),
+        )
+        b = guarded.select(
+            "cluster", F.col("rk").alias("rk_b"), F.col("vec_id").alias("id_b"),
+            F.col("e").alias("eb"),
+        )
+        vs_batch = (
+            a.join(b, "cluster")
+            .filter(F.col("rk_a") < F.col("rk_b"))
+            .select("id_b", "id_a", pair_cos.alias("cos"))
+        )
+        matches = (
+            vs_state.unionByName(vs_batch)
+            .filter(F.col("cos") >= F.lit(threshold))
+            .groupBy(F.col("id_b").alias("vec_id"))
+            .agg(
+                F.max("cos").alias("best_cos"),
+                # highest-cosine neighbor, ties broken to the LOWEST id
+                F.expr("max_by(id_a, struct(cos, -id_a))").alias("dup_of"),
+            )
+        )
+        decisions = (
+            guarded.select("vec_id", "cluster")
+            .join(matches, "vec_id", "left")
+            .select(
+                "vec_id",
+                F.col("dup_of").isNotNull().alias("is_dup"),
+                "dup_of",
+                "best_cos",
+                "cluster",
+            )
+        )
+        new_members = guarded.select(
+            "vec_id", "cluster", F.round(F.col("cent_cos"), 6).alias("cent_cos"), "e"
+        )
+        # members are cluster-ordered within each write task so parquet
+        # row-group / file min-max stats stay tight and the cluster IN
+        # pushdown above actually skips data at scale
+        commit_batch(
+            spark, state_dir, batch_id, guard, decisions,
+            [(MEMBERS_SUBDIR, "vec_id", new_members, members, "cluster")],
+        )
     finally:
+        if ranked_pin is not None:
+            ranked_pin.release()
         ranked.unpersist()
-
-
-def _process_batch_inner(spark, ranked, batch_id, state_dir, threshold) -> None:
-    # REPLAY idempotence is subtler than the self-pair exclusion alone:
-    # on a replayed batch the state already holds this batch's first-
-    # attempt SURVIVORS, so a replayed vector x also pairs (via
-    # vs_state) with lower-priority batch-mates that survived — pairs
-    # the upper-triangular batch rule never scores. Those pairs cannot
-    # veto x because survivors are pairwise BELOW the threshold by
-    # construction (if cos(a,b) >= t the lower-priority one was
-    # dropped), so the replayed decisions are identical — pinned by
-    # test_replayed_batch_is_idempotent.
-    members = _read_or_empty(
-        spark, os.path.join(state_dir, MEMBERS_SUBDIR), _MEMBERS_SCHEMA
-    ).drop("ingest_batch")
-
-    # one decision per vec_id EVER: a vec_id re-delivered in a LATER
-    # batch (cross-batch at-least-once delivery) must not get a second
-    # decision row — the member-state anti-join alone protected only
-    # the members invariant, while decisions/ would carry the id under
-    # two ingest_batch partitions (round-7 review finding). Prior
-    # decisions from OTHER batches exclude the re-delivery; the current
-    # batch's own partition is about to be overwritten (replay-safe).
-    # Round 9: the read is amortized through the decided-id guard
-    # (module docstring); LIME_REDELIVERY_GUARD=disk keeps the round-8
-    # per-batch read as the differential twin.
-    decisions_path = os.path.join(state_dir, DECISIONS_SUBDIR)
-    # every mode routes through DecisionIdGuard (round-10): disk — and
-    # auto before its measured crossover — reproduces the round-8
-    # per-batch read INSIDE the guard; auto past its crossover uses the
-    # amortized exact broadcast probe + increment joins, and bloom the
-    # bitset screen + exact confirm.
-    guard = decision_guard(decisions_path, "vec_id")
-    ranked = guard.filter_prior(ranked, batch_id)
-
-    # pin the guarded batch ONCE (round-10 advice): the two pair joins,
-    # the decisions build, and the member append all consume `ranked` —
-    # unpinned, each re-executes the guard's Arrow probe and the
-    # per-increment anti-joins (~4x per micro-batch), and in disk mode
-    # re-scans the decisions dir this very batch overwrites. Mirrors
-    # dedup.py's _Pin(guarded); batch-sized, released in the finally.
-    ranked_pin = _Pin(ranked)
-    ranked = ranked_pin.df
-    pins = [ranked_pin]
-
-    pair_cos = F.round(
-        _dot(F.col("ea"), F.col("eb")) / (_gnorm(F.col("ea")) * _gnorm(F.col("eb"))),
-        6,
-    )
-    # Prune the member-state read to the batch's own cells (round-11,
-    # guide §6 predicate pushdown): a micro-batch touches at most
-    # n_clusters cells and the centroid matrix is already driver-held,
-    # so collecting the batch's distinct clusters is a contract-bounded
-    # driver transfer (≤ k ints); the IN filter pushes down to the
-    # members parquet scan, making the per-batch state read cost
-    # proportional to the touched cells instead of the whole accepted
-    # corpus. Equivalence: vs_state joins on cluster, so members of
-    # untouched cells can never pair with a batch row. (The vec_id
-    # anti-join in _write_state deliberately stays unpruned — a
-    # re-delivered id may hash to a different cell if its embedding
-    # changed, and that invariant is corpus-wide.)
-    batch_clusters = [r[0] for r in ranked.select("cluster").distinct().collect()]
-    # vs accepted members of the same cell (self-pairs excluded: on a
-    # batch replay the replayed vectors are already members)
-    vs_state = (
-        members.filter(F.col("cluster").isin(batch_clusters))
-        .select(
-            "cluster", F.col("vec_id").alias("id_a"), F.col("e").alias("ea")
-        )
-        .join(
-            ranked.select(
-                "cluster", F.col("vec_id").alias("id_b"), F.col("e").alias("eb")
-            ),
-            "cluster",
-        )
-        .filter(F.col("id_a") != F.col("id_b"))
-        .select("id_b", "id_a", pair_cos.alias("cos"))
-    )
-    # vs higher-priority batch-mates — upper-triangular on the batch
-    # rank (kept or dropped may veto), so one batch == batch semantics
-    a = ranked.select(
-        "cluster", F.col("rk").alias("rk_a"), F.col("vec_id").alias("id_a"),
-        F.col("e").alias("ea"),
-    )
-    b = ranked.select(
-        "cluster", F.col("rk").alias("rk_b"), F.col("vec_id").alias("id_b"),
-        F.col("e").alias("eb"),
-    )
-    vs_batch = (
-        a.join(b, "cluster")
-        .filter(F.col("rk_a") < F.col("rk_b"))
-        .select("id_b", "id_a", pair_cos.alias("cos"))
-    )
-    matches = (
-        vs_state.unionByName(vs_batch)
-        .filter(F.col("cos") >= F.lit(threshold))
-        .groupBy(F.col("id_b").alias("vec_id"))
-        .agg(
-            F.max("cos").alias("best_cos"),
-            # highest-cosine neighbor, ties broken to the LOWEST id
-            F.expr("max_by(id_a, struct(cos, -id_a))").alias("dup_of"),
-        )
-    )
-    # eager pin BEFORE the write: the plan may read the decisions dir
-    # (decided-id anti-join, disk-guard phase) while the write replaces
-    # partitions of that same dir — a lazy plan can list/read part
-    # files mid-overwrite and die FAILED_READ_FILE (race surfaced by
-    # the round-8 generative dedup_ingest family in the LSH twin of
-    # this module; latent here since the round-7 prior-ids guard).
-    # Batch-sized frame: one tiny extra job per micro-batch; blocks
-    # released deterministically at the end of the batch.
-    decisions_pin = _Pin(
-        ranked.select("vec_id", "cluster")
-        .join(matches, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.col("dup_of").isNotNull().alias("is_dup"),
-            "dup_of",
-            "best_cos",
-            "cluster",
-        )
-        .withColumn("ingest_batch", F.lit(batch_id))
-    )
-    pins.append(decisions_pin)
-    try:
-        _write_state(spark, decisions_pin, ranked, batch_id, state_dir, guard, pins)
-    finally:
-        for p in pins:
-            p.release()
-
-
-def _write_state(spark, decisions_pin, ranked, batch_id, state_dir, guard, pins):
-    members = _read_or_empty(
-        spark, os.path.join(state_dir, MEMBERS_SUBDIR), _MEMBERS_SCHEMA
-    ).drop("ingest_batch")
-    sinks.idempotent_reload(
-        decisions_pin.df, os.path.join(state_dir, DECISIONS_SUBDIR), "ingest_batch"
-    )
-
-    # survivors extend the member state; a vec_id already accepted in an
-    # EARLIER batch is never appended twice (left_anti), so member ids
-    # stay unique even under cross-batch re-delivery. Survivor ids come
-    # from the just-written decisions partition (schema'd read — an
-    # empty micro-batch writes a _SUCCESS-only partition that schema
-    # inference chokes on; same lesson as the LSH gate).
-    survivor_ids = (
-        _read_or_empty(
-            spark, os.path.join(state_dir, DECISIONS_SUBDIR), _DECISIONS_SCHEMA
-        )
-        .filter((F.col("ingest_batch") == batch_id) & ~F.col("is_dup"))
-        .select("vec_id")
-    )
-    # same read-under-overwrite pin as decisions: this plan reads
-    # the members dir (the re-delivery anti-join) while replacing
-    # partitions of the members dir
-    members_pin = _Pin(
-        ranked.select(
-            "vec_id", "cluster", F.round(F.col("cent_cos"), 6).alias("cent_cos"),
-            "e",
-        )
-        .join(survivor_ids, "vec_id", "left_semi")
-        .join(members.select("vec_id"), "vec_id", "left_anti")
-        .withColumn("ingest_batch", F.lit(batch_id))
-        # cluster-ordered within each write task so parquet row-group /
-        # file min-max stats stay tight and the round-11 cluster IN
-        # pushdown (above) actually skips data at scale; batch-sized
-        # in-partition sort, no exchange
-        .sortWithinPartitions("cluster")
-    )
-    pins.append(members_pin)
-    sinks.idempotent_reload(
-        members_pin.df, os.path.join(state_dir, MEMBERS_SUBDIR), "ingest_batch"
-    )
-    # only after BOTH writes succeeded — a crash in between must
-    # leave the increment unrecorded so the replay re-decides the
-    # batch and completes the member write (crash convergence).
-    # record() is a no-op on the disk path, so the call is
-    # mode-agnostic.
-    guard.record(spark, batch_id, decisions_pin.df.select("vec_id"))
 
 
 def semantic_dedup_on_ingest(

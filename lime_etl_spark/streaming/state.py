@@ -3,7 +3,10 @@
 Each incremental maintainer keeps its state as batch-partitioned
 parquet (dynamic partition overwrite per micro-batch — the replay
 idempotency design documented in streaming/scd2.py); these helpers hold
-the pieces every maintainer needs identically.
+the pieces every maintainer needs identically. ``commit_batch`` is the
+one micro-batch commit of both ingest gates (streaming/dedup.py and
+streaming/semantic.py): decisions, then the survivor appends, then the
+re-delivery guard's record.
 """
 
 from __future__ import annotations
@@ -13,6 +16,8 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from lime_etl_spark.io import sinks
 
 
 def read_state_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -886,3 +891,82 @@ def decision_guard(path: str, id_col: str) -> DecisionIdGuard:
         while len(_GUARDS) > _MAX_GUARDS:
             _GUARDS.pop(next(iter(_GUARDS)))
         return g
+
+
+def commit_batch(
+    spark: SparkSession,
+    state_dir: str,
+    batch_id: int,
+    guard: DecisionIdGuard,
+    decisions: DataFrame,
+    appends: list,
+) -> None:
+    """Commit one ingest-gate micro-batch: write ``decisions`` (one row
+    per guarded batch id, with a boolean ``is_dup``) to ``guard.path``,
+    append the batch's survivors to each state table, then extend the
+    re-delivery guard.
+
+    ``appends`` is a list of ``(subdir, key, rows, state, sort_col)``,
+    written in order: ``rows`` are the batch's candidate state rows keyed
+    on ``key``, ``state`` is the frame the caller already read from
+    ``state_dir/subdir`` this batch, and ``sort_col`` (or None) orders
+    rows within each write task. Each append writes
+    ``rows ⋉ survivors ▷ state`` under the batch's partition.
+
+    Every write is a dynamic partition overwrite keyed on ``batch_id``
+    (io/sinks.idempotent_reload), so a replayed batch rewrites its own
+    partitions. Why each step has the shape it has:
+
+    - Each frame is pinned (eager localCheckpoint) BEFORE its write: the
+      decisions plan may read the decisions dir (the guard's disk phase)
+      and each append reads its own target dir (the anti-join below),
+      while the write replaces partitions of that same dir. A lazy plan
+      lists/reads the dir during the overwrite commit and dies
+      FAILED_READ_FILE on a part file the commit just swapped.
+    - Survivors come from a schema'd read of the just-written decisions
+      partition, not schema inference: an EMPTY micro-batch writes a
+      partition holding only ``_SUCCESS``, and inference over the dir
+      then fails with UNABLE_TO_INFER_SCHEMA. (Taking them from the
+      decisions pin instead measured 3 more Spark jobs per batch.)
+    - The anti-join against the existing state makes a REPLAYED append
+      empty — its rows are already stored under this batch's partition —
+      so the overwrite touches no partitions and the first attempt's
+      state stands; it also keeps a re-delivered id from being stored
+      twice. Its right side takes no ``distinct()``: existence checks
+      tolerate duplicates, and a distinct over corpus-scale state would
+      add a full shuffle per micro-batch.
+    - ``guard.record`` runs only after every write succeeded: a crash in
+      between leaves the increment unrecorded, so the replay re-decides
+      the batch and completes the missing writes instead of the guard
+      hiding the ids (crash convergence). It is a no-op on the disk
+      phase, so the call is mode-agnostic.
+    """
+    pins = []
+    try:
+        decisions_pin = _Pin(decisions.withColumn("ingest_batch", F.lit(batch_id)))
+        pins.append(decisions_pin)
+        sinks.idempotent_reload(decisions_pin.df, guard.path, "ingest_batch")
+        schema = f"{guard.id_col} bigint, is_dup boolean, ingest_batch bigint"
+        survivors = (
+            read_state_or_empty(spark, guard.path, schema)
+            .filter((F.col("ingest_batch") == batch_id) & ~F.col("is_dup"))
+            .select(guard.id_col)
+        )
+        for subdir, key, rows, state, sort_col in appends:
+            append = (
+                rows.join(
+                    survivors.withColumnRenamed(guard.id_col, key), key, "left_semi"
+                )
+                .join(state.select(key), key, "left_anti")
+                .withColumn("ingest_batch", F.lit(batch_id))
+            )
+            if sort_col is not None:
+                append = append.sortWithinPartitions(sort_col)
+            pins.append(_Pin(append))
+            sinks.idempotent_reload(
+                pins[-1].df, os.path.join(state_dir, subdir), "ingest_batch"
+            )
+        guard.record(spark, batch_id, decisions_pin.df.select(guard.id_col))
+    finally:
+        for p in pins:
+            p.release()

@@ -204,6 +204,46 @@ def test_write_back_batched(spark):
     write_back_responses(df.repartition(2), make_client, 123, rows_per_second=10000)
 
 
+def test_response_id_pages_cover_ids_and_reject_sizes_below_one():
+    from lime_etl_spark.io.limesurvey import (
+        extract_responses_partitioned,
+        response_id_pages,
+    )
+
+    assert response_id_pages(37, 10) == [(1, 10), (11, 20), (21, 30), (31, 37)]
+    assert response_id_pages(10, 10) == [(1, 10)]
+    assert response_id_pages(0, 10) == []
+    for bad in (0, -10):
+        with pytest.raises(ValueError, match="^page_size must be"):
+            response_id_pages(37, bad)
+        # raised while planning, before any Spark work
+        with pytest.raises(ValueError, match="^page_size must be"):
+            extract_responses_partitioned(None, None, 1, 37, page_size=bad)
+
+
+def test_datasource_live_partitions_and_bad_page_sizes():
+    """The batch source's live mode plans one partition per id page; a
+    page size below 1, batch or stream, raises naming its option."""
+    from lime_etl_spark.io.limesurvey_source import (
+        LimeSurveyReader,
+        LimeSurveyStreamReader,
+    )
+
+    live = {"url": "http://fake", "username": "u", "password": "p", "sid": "1"}
+    parts = LimeSurveyReader(
+        {**live, "max_response_id": "37", "page_size": "10"}
+    ).partitions()
+    assert [(p.from_id, p.to_id, p.replay_idx) for p in parts] == [
+        (1, 10, None), (11, 20, None), (21, 30, None), (31, 37, None)
+    ]
+    for bad in ("0", "-3"):
+        reader = LimeSurveyReader({**live, "max_response_id": "37", "page_size": bad})
+        with pytest.raises(ValueError, match="^page_size must be"):
+            reader.partitions()
+        with pytest.raises(ValueError, match="^stream_page_size must be"):
+            LimeSurveyStreamReader({**live, "stream_page_size": bad})
+
+
 def test_partitioned_extract_ranges(spark):
     """Range-paged extract: each executor page requests ONLY its id
     slice server-side; rows across pages reassemble the full survey."""

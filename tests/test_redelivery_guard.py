@@ -16,9 +16,10 @@ and named the amortized design this round implements. Bars here:
 - STALENESS: wiping/rebuilding the state dir under a live guard is
   detected by the per-batch partition listing (rebuild, not stale ids).
 - CRASH CONVERGENCE: a crash AFTER the decisions write but BEFORE the
-  bands/docs writes must leave the increment unrecorded, so the replay
-  re-decides the batch and completes the missing writes (recording
-  early would make the guard hide the ids and the replay skip them).
+  bands/docs (LSH) or members (semantic) writes must leave the
+  increment unrecorded, so the replay re-decides the batch and
+  completes the missing writes (recording early would make the guard
+  hide the ids and the replay skip them).
 
 The generative families (tools/llmgen.py dedup_ingest/semantic_ingest)
 run under every guard mode and pin the same contract at volume.
@@ -178,6 +179,26 @@ def test_guard_detects_state_dir_wipe(spark, docs, tmp_path, monkeypatch):
     assert _decisions(spark, state).count() == n_first
 
 
+def _crash_on_second_write(monkeypatch, run) -> None:
+    """Run ``run`` with the second state write raising: the gate's
+    decisions write lands, the next one (bands or members) dies."""
+    from lime_etl_spark.io import sinks
+
+    real_reload = sinks.idempotent_reload
+    calls = {"n": 0}
+
+    def crashing_reload(df, path, part_col):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise RuntimeError("injected crash between state writes")
+        return real_reload(df, path, part_col)
+
+    monkeypatch.setattr(sinks, "idempotent_reload", crashing_reload)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run()
+    monkeypatch.setattr(sinks, "idempotent_reload", real_reload)
+
+
 @pytest.mark.slow
 def test_crash_between_writes_replays_convergently(
     spark, docs, tmp_path, monkeypatch
@@ -185,29 +206,15 @@ def test_crash_between_writes_replays_convergently(
     """Crash after the decisions write, before the bands/docs writes:
     the increment must NOT be recorded, so the replayed batch re-decides
     (identically) and completes the missing state writes."""
-    from lime_etl_spark.io import sinks
-
     _force_exact(monkeypatch)
     state = str(tmp_path / "state")
     b0 = docs.filter(F.col("doc_id") % 3 == 0)
     sdedup.process_batch(b0, 0, state, threshold=0.5)
 
-    real_reload = sinks.idempotent_reload
-    calls = {"n": 0}
-
-    def crashing_reload(df, path, part_col):
-        calls["n"] += 1
-        if calls["n"] == 2:  # decisions ok, then die on the bands write
-            raise RuntimeError("injected crash between state writes")
-        return real_reload(df, path, part_col)
-
     b1 = docs.filter(F.col("doc_id") % 3 == 1)
-    monkeypatch.setattr(sinks, "idempotent_reload", crashing_reload)
-    monkeypatch.setattr(sdedup.sinks, "idempotent_reload", crashing_reload)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        sdedup.process_batch(b1, 1, state, threshold=0.5)
-    monkeypatch.setattr(sinks, "idempotent_reload", real_reload)
-    monkeypatch.setattr(sdedup.sinks, "idempotent_reload", real_reload)
+    _crash_on_second_write(
+        monkeypatch, lambda: sdedup.process_batch(b1, 1, state, threshold=0.5)
+    )
 
     guard = sstate.decision_guard(
         os.path.join(state, sdedup.DECISIONS_SUBDIR), "doc_id"
@@ -227,6 +234,55 @@ def test_crash_between_writes_replays_convergently(
         (sdedup.DECISIONS_SUBDIR, sdedup._DECISIONS_SCHEMA),
         (sdedup.BANDS_SUBDIR, sdedup._BANDS_SCHEMA),
         (sdedup.DOCS_SUBDIR, sdedup._DOCS_SCHEMA),
+    ):
+        assert _rows(
+            read_state_or_empty(spark, os.path.join(state, sub), schema)
+        ) == _rows(read_state_or_empty(spark, os.path.join(clean, sub), schema))
+
+
+@pytest.mark.slow
+def test_semantic_crash_between_writes_replays_convergently(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The semantic gate's twin: crash after the decisions write, before
+    the members write. The increment stays unrecorded, and the replay
+    converges to a clean run's decisions and members."""
+    from lime_etl_spark.ops import similarity
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    cents = similarity.kmeans_centroids_embeddings(emb, dim=64, k=16, n_iter=5)
+    batches = [emb.filter(F.col("vec_id") % 3 == k) for k in range(3)]
+
+    def run(state, k):
+        ssem.process_batch(batches[k], k, state, cents, threshold=0.3)
+
+    _force_exact(monkeypatch)
+    state = str(tmp_path / "state")
+    run(state, 0)
+    _crash_on_second_write(monkeypatch, lambda: run(state, 1))
+
+    guard = sstate.decision_guard(
+        os.path.join(state, ssem.DECISIONS_SUBDIR), "vec_id"
+    )
+    assert guard.phase == "bc"  # batch 1 ran on the exact phase
+    assert 1 not in guard._incs  # crash left the increment unrecorded
+    # the tear is real: batch 1's decisions landed, its members did not
+    def batch_rows(sub, schema, k):
+        return read_state_or_empty(
+            spark, os.path.join(state, sub), schema
+        ).filter(F.col("ingest_batch") == k).count()
+
+    assert batch_rows(ssem.DECISIONS_SUBDIR, ssem._DECISIONS_SCHEMA, 1) > 0
+    assert batch_rows(ssem.MEMBERS_SUBDIR, ssem._MEMBERS_SCHEMA, 1) == 0
+
+    run(state, 1)  # the checkpoint replays batch 1
+    run(state, 2)
+    clean = str(tmp_path / "clean")
+    for k in range(3):
+        run(clean, k)
+    for sub, schema in (
+        (ssem.DECISIONS_SUBDIR, ssem._DECISIONS_SCHEMA),
+        (ssem.MEMBERS_SUBDIR, ssem._MEMBERS_SCHEMA),
     ):
         assert _rows(
             read_state_or_empty(spark, os.path.join(state, sub), schema)

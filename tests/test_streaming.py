@@ -905,7 +905,9 @@ def test_incremental_dedup_heals_torn_batch(spark, tmp_path, monkeypatch):
 
     # fault injection: let the first two idempotent_reload calls of the
     # next batch succeed (decisions, bands), kill the third (doc store)
-    real = sdedup.sinks.idempotent_reload
+    from lime_etl_spark.io import sinks
+
+    real = sinks.idempotent_reload
     seen = {"n": 0}
 
     def torn(df, path, partition_column):
@@ -914,7 +916,7 @@ def test_incremental_dedup_heals_torn_batch(spark, tmp_path, monkeypatch):
             raise RuntimeError("simulated crash before doc-store commit")
         real(df, path, partition_column)
 
-    monkeypatch.setattr(sdedup.sinks, "idempotent_reload", torn)
+    monkeypatch.setattr(sinks, "idempotent_reload", torn)
     with _pytest.raises(RuntimeError, match="simulated crash"):
         sdedup.process_batch(mk(b2), 1, state)
     monkeypatch.undo()
