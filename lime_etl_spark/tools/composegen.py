@@ -48,9 +48,6 @@ from __future__ import annotations
 import argparse
 import datetime as _dt
 import itertools
-import json
-import random
-import time
 from collections import Counter
 
 import numpy as np
@@ -69,7 +66,6 @@ from lime_etl_spark.tools.llmgen import (
     py_band_keys,
     py_minhash_sig,
     py_shingles,
-    py_tokens,
     round_half_up,
 )
 from lime_etl_spark.tools.opsgen import (
@@ -77,6 +73,7 @@ from lime_etl_spark.tools.opsgen import (
     py_quality_score,
     py_text_stats,
 )
+from lime_etl_spark.tools.sweep import Sweep, check_family_seed, emit
 
 # ---------------------------------------------------------------------------
 # Composed oracle stage helpers (python side)
@@ -829,64 +826,12 @@ FAMILIES = [
 
 
 def check_seed(spark, seed: int) -> dict:
-    rng = random.Random(seed)
-    total = sum(w for _, w in FAMILIES)
-    pick = rng.uniform(0, total)
-    acc = 0.0
-    fam = FAMILIES[-1][0]
-    for f, w in FAMILIES:
-        acc += w
-        if pick <= acc:
-            fam = f
-            break
-    rec: dict = {"seed": seed}
-    try:
-        ops, errs, rows = fam(spark, rng)
-        rec["ops"] = ops
-        if errs:
-            rec["mismatch"] = errs
-        else:
-            rec["rows"] = rows
-    except Exception as exc:
-        rec["ops"] = [fam.__name__]
-        rec["error"] = f"{type(exc).__name__}: {exc}"
-    return rec
+    return check_family_seed(spark, seed, FAMILIES)
 
 
-def run_sweep(spark, seeds, progress_every: int = 50) -> dict:
-    t0 = time.time()
-    results, failures = [], []
-    op_hist: Counter = Counter()
-    rows_total = 0
-    for i, seed in enumerate(seeds):
-        rec = check_seed(spark, seed)
-        if "error" in rec or "mismatch" in rec:
-            failures.append(rec)
-        else:
-            rows_total += rec["rows"]
-        for op in rec.get("ops", []):
-            op_hist[op.split(":")[0] + ":" + op.split(":")[1] if ":" in op else op] += 1
-        results.append(rec)
-        if progress_every and (i + 1) % progress_every == 0:
-            print(
-                f"# {i + 1}/{len(seeds)} seeds, {len(failures)} failures, "
-                f"{time.time() - t0:.0f}s",
-                flush=True,
-            )
-    return {
-        "harness": (
-            "composegen (drawn cross-surface pipeline chains vs composed "
-            "pure-Python stage oracles)"
-        ),
-        "seeds_run": len(results),
-        "seed_min": min(seeds) if len(seeds) else None,
-        "seed_max": max(seeds) if len(seeds) else None,
-        "failures": failures,
-        "failure_count": len(failures),
-        "rows_compared_total": rows_total,
-        "op_histogram": dict(sorted(op_hist.items())),
-        "elapsed_sec": round(time.time() - t0, 1),
-    }
+def _two_level(op: str) -> str:
+    # histogram key: family plus its first parameter (ingest_chain:b=2)
+    return ":".join(op.split(":")[:2])
 
 
 def main() -> None:
@@ -900,14 +845,14 @@ def main() -> None:
 
     spark = get_spark("composegen", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
-    report = run_sweep(spark, range(args.start, args.start + args.seeds))
-    print(json.dumps({k: v for k, v in report.items() if k != "failures"}))
-    if report["failures"]:
-        for f in report["failures"][:10]:
-            print(json.dumps(f))
-    if args.out:
-        with open(args.out, "w") as fh:
-            json.dump(report, fh, indent=1)
+    sw = Sweep(label=_two_level).run(
+        lambda s: check_seed(spark, s), range(args.start, args.start + args.seeds)
+    )
+    harness = (
+        "composegen (drawn cross-surface pipeline chains vs composed "
+        "pure-Python stage oracles)"
+    )
+    emit(sw.report({"harness": harness}), args.out)
 
 
 if __name__ == "__main__":

@@ -167,7 +167,11 @@ def phase_retry(
     form: every scored query retry-deterministic, not just exemplars).
     """
     from lime_etl_spark.registry import PRIMARY_QUERIES, REGISTRY
-    from lime_etl_spark.session import DEFAULT_SHUFFLE_PARTITIONS, get_spark
+    from lime_etl_spark.session import (
+        DEFAULT_LOCAL_DRIVER_MEM,
+        DEFAULT_SHUFFLE_PARTITIONS,
+        get_spark,
+    )
     from lime_etl_spark.tools.spill_check import content_checksum
 
     # expand sentinels wherever they appear (they used to expand only
@@ -190,7 +194,7 @@ def phase_retry(
     spark = get_spark(
         "fault-check-retry",
         master=f"local[{DEFAULT_SHUFFLE_PARTITIONS},4]",
-        extra_conf={"spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")},
+        extra_conf={"spark.driver.memory": DEFAULT_LOCAL_DRIVER_MEM},
     )
     spark.sparkContext.setLogLevel("ERROR")
     results: dict[str, dict] = {}
@@ -324,7 +328,7 @@ def phase_kill(sf_dir: str, out_path: str, executor_mem: str) -> None:
     reliable checkpoints."""
     from lime_etl_spark.ops.util import package_root
     from lime_etl_spark.registry import REGISTRY
-    from lime_etl_spark.session import get_spark
+    from lime_etl_spark.session import DEFAULT_LOCAL_DRIVER_MEM, get_spark
     from lime_etl_spark.tools.spill_check import content_checksum
 
     pkg_root = package_root()
@@ -334,7 +338,7 @@ def phase_kill(sf_dir: str, out_path: str, executor_mem: str) -> None:
         extra_conf={
             "spark.executor.memory": executor_mem,
             "spark.executorEnv.PYTHONPATH": pkg_root,
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+            "spark.driver.memory": DEFAULT_LOCAL_DRIVER_MEM,
         },
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -17,11 +17,10 @@ Artifact runner:
 from __future__ import annotations
 
 import argparse
-import json
 import math
-import time
-from collections import Counter
 from decimal import Decimal
+
+from lime_etl_spark.tools.sweep import Sweep, emit
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -280,39 +279,11 @@ def _check_seed_hash(rec: dict, rel, duck) -> dict:
     return rec
 
 
-def run_sweep(spark, sf_dir: str, seeds, progress_every: int = 200) -> dict:
+def run_sweep(spark, sf_dir: str, seeds, compare_mode: str = "full") -> dict:
     duck = duck_connect(sf_dir)
-    t0 = time.time()
-    results, failures = [], []
-    op_hist: Counter = Counter()
-    rows_total = 0
-    for i, seed in enumerate(seeds):
-        rec = check_seed(spark, duck, seed, sf_dir)
-        if "error" in rec or "mismatch" in rec:
-            failures.append(rec)
-        else:
-            rows_total += rec["rows"]
-        for op in rec.get("ops", []):
-            op_hist[op.split(":")[0]] += 1
-        results.append(rec)
-        if progress_every and (i + 1) % progress_every == 0:
-            print(
-                f"# {i + 1}/{len(seeds)} seeds, {len(failures)} failures, "
-                f"{time.time() - t0:.0f}s",
-                flush=True,
-            )
+    sw = Sweep().run(lambda s: check_seed(spark, duck, s, sf_dir, compare_mode), seeds)
     duck.close()
-    return {
-        "sf_dir": sf_dir,
-        "seeds_run": len(results),
-        "seed_min": min(seeds) if len(seeds) else None,
-        "seed_max": max(seeds) if len(seeds) else None,
-        "failures": failures,
-        "failure_count": len(failures),
-        "rows_compared_total": rows_total,
-        "op_histogram": dict(sorted(op_hist.items())),
-        "elapsed_sec": round(time.time() - t0, 1),
-    }
+    return sw.report({"sf_dir": sf_dir})
 
 
 # The full op-label vocabulary qgen can emit (extracted from the
@@ -331,8 +302,7 @@ QGEN_OPS = [
 
 def run_sweep_min_ops(
     spark, sf_dir: str, start: int, min_seeds: int, min_per_op: int,
-    cap: int = 50000, progress_every: int = 50, seed_timeout: float = 180.0,
-    compare_mode: str = "full",
+    cap: int = 50000, seed_timeout: float = 180.0, compare_mode: str = "full",
 ) -> dict:
     """Round-9 (r8 verdict task #3): run ``min_seeds`` random seeds,
     then TARGET the ops still under the ``min_per_op`` floor — the r8
@@ -342,119 +312,96 @@ def run_sweep_min_ops(
     plan-only generator (no jobs) is scanned for seeds whose drawn
     pipeline contains an under-floor op, and those seeds run through
     the identical differential check; the artifact lists the targeted
-    seeds separately so the two phases stay distinguishable."""
+    seeds separately so the two phases stay distinguishable.
+
+    Per-seed wall budget: a drawn pipeline's DuckDB oracle can explode
+    at sf>=1 (e.g. a self-outer join whose intermediate is ~rows^2 on a
+    hot key) — one such seed otherwise wedges the whole sweep for hours
+    at tens of GB. Timed-out seeds are NOT silently dropped: they're
+    listed in the artifact and excluded from the op floor, so coverage
+    claims stay honest. This is a compute bound, not a correctness
+    filter — the same seed passes at smaller SF (both engines, same
+    data, same plan)."""
+    import threading
+
+    from lime_etl_spark.tools.qgen import generate_query
+
     duck = duck_connect(sf_dir)
-    t0 = time.time()
-    results, failures = [], []
     timeouts: list[int] = []
     targeted_seeds: list[int] = []
-    op_hist: Counter = Counter()
-    rows_total = 0
-    seed = start
-    phase = "random"
-    queue: list[int] = []
-    scan_seed = start + 1_000_000  # disjoint from the random block
-    while seed < start + cap or queue:
-        # Per-seed wall budget: a drawn pipeline's DuckDB oracle can
-        # explode at sf>=1 (e.g. a self-outer join whose intermediate is
-        # ~rows^2 on a hot key) — one such seed otherwise wedges the
-        # whole sweep for hours at tens of GB. Timed-out seeds are NOT
-        # silently dropped: they're listed in the artifact and excluded
-        # from the op floor, so coverage claims stay honest. This is a
-        # compute bound, not a correctness filter — the same seed passes
-        # at smaller SF (both engines, same data, same plan).
-        if phase == "random":
-            this_seed = seed
-            seed += 1
-            if seed - start >= min_seeds:
-                phase = "targeted"
-        else:
-            under = [t for t in QGEN_OPS if op_hist.get(t, 0) < min_per_op]
-            if not under:
-                break
-            while not queue:
-                # plan-only scan (builds the pipeline, runs NO jobs)
-                from lime_etl_spark.tools.qgen import generate_query
+    n_random = min(max(min_seeds, 1), cap)
+    sw = Sweep()
 
+    def seeds():
+        yield from range(start, start + n_random)
+        if min_seeds > cap:
+            return
+        scan_seed = start + 1_000_000  # disjoint from the random block
+        capped = False
+        while True:
+            under = [t for t in QGEN_OPS if sw.ops[t] < min_per_op]
+            found = None
+            while under and found is None and not capped:
+                # plan-only scan (builds the pipeline, runs NO jobs)
                 rel = generate_query(scan_seed, spark, sf_dir)
                 if any(o.split(":")[0] in under for o in rel.ops):
-                    queue.append(scan_seed)
+                    found = scan_seed
                 scan_seed += 1
                 if scan_seed > start + 1_000_000 + 100_000:
                     print("# targeting scan cap hit", flush=True)
-                    queue.append(None)
-            this_seed = queue.pop(0)
-            if this_seed is None:
-                break
-            targeted_seeds.append(this_seed)
+                    capped = True
+            if found is None:
+                return
+            targeted_seeds.append(found)
+            yield found
 
+    def check(seed):
+        nonlocal duck
         box: dict = {}
 
-        def _one(s=this_seed, d=duck):
-            box["rec"] = check_seed(spark, d, s, sf_dir, compare_mode)
+        def one(d=duck):
+            box["rec"] = check_seed(spark, d, seed, sf_dir, compare_mode)
 
-        import threading
-
-        th = threading.Thread(target=_one, daemon=True)
+        th = threading.Thread(target=one, daemon=True)
         th.start()
         th.join(timeout=seed_timeout)
-        if th.is_alive():
-            try:
-                duck.interrupt()
-            except Exception:
-                pass
-            spark.sparkContext.cancelAllJobs()
-            th.join(timeout=60)
-            timeouts.append(this_seed)
-            print(f"# seed {this_seed}: exceeded {seed_timeout}s budget, skipped", flush=True)
-            # close the old connection ONLY once the worker thread is
-            # confirmed dead: interrupt() is best-effort and the join
-            # can expire with the query still running — DuckDB
-            # connections are not safe to close during concurrent use
-            # (close-while-querying can crash the whole sweep). If the
-            # zombie survives the join, LEAK the connection to it and
-            # just open a fresh one.
-            if not th.is_alive():
-                duck.close()
-            duck = duck_connect(sf_dir)  # a fresh connection; the old one may be poisoned
-            continue
-        rec = box["rec"]
-        if "error" in rec or "mismatch" in rec:
-            failures.append(rec)
-        else:
-            rows_total += rec["rows"]
-        for op in rec.get("ops", []):
-            op_hist[op.split(":")[0]] += 1
-        results.append(rec)
-        if progress_every and len(results) % progress_every == 0:
-            short = min(op_hist.get(t, 0) for t in QGEN_OPS)
-            print(
-                f"# {len(results)} seeds ({phase}), {len(failures)} failures, "
-                f"min-op={short}, {time.time() - t0:.0f}s",
-                flush=True,
-            )
-        if phase == "targeted" and all(
-            op_hist.get(t, 0) >= min_per_op for t in QGEN_OPS
-        ):
-            break
+        if not th.is_alive():
+            return box["rec"]
+        try:
+            duck.interrupt()
+        except Exception:
+            pass
+        spark.sparkContext.cancelAllJobs()
+        th.join(timeout=60)
+        timeouts.append(seed)
+        print(f"# seed {seed}: exceeded {seed_timeout}s budget, skipped", flush=True)
+        # close the old connection ONLY once the worker thread is
+        # confirmed dead: interrupt() is best-effort and the join can
+        # expire with the query still running — DuckDB connections are
+        # not safe to close during concurrent use (close-while-querying
+        # can crash the whole sweep). If the zombie survives the join,
+        # LEAK the connection to it and just open a fresh one.
+        if not th.is_alive():
+            duck.close()
+        duck = duck_connect(sf_dir)  # the old one may be poisoned
+        return None
+
+    sw.run(
+        check, seeds(),
+        stop=lambda sw: len(sw.drawn) >= min_seeds
+        and sw.floor_met(QGEN_OPS, min_per_op),
+        note=lambda sw: f", min-op={min(sw.ops[t] for t in QGEN_OPS)}",
+    )
     duck.close()
-    return {
+    return sw.report({
         "sf_dir": sf_dir,
         "compare_mode": compare_mode,
         "min_per_op": min_per_op,
         "seed_timeout_sec": seed_timeout,
         "timed_out_seeds": timeouts,
         "targeted_seeds": targeted_seeds,
-        "ops_floor_met": all(op_hist.get(t, 0) >= min_per_op for t in QGEN_OPS),
-        "seeds_run": len(results),
-        "seed_min": start,
-        "seed_max": seed - 1,
-        "failures": failures,
-        "failure_count": len(failures),
-        "rows_compared_total": rows_total,
-        "op_histogram": dict(sorted(op_hist.items())),
-        "elapsed_sec": round(time.time() - t0, 1),
-    }
+        "ops_floor_met": sw.floor_met(QGEN_OPS, min_per_op),
+    }) | {"seed_max": start + n_random - 1}
 
 
 def main() -> None:
@@ -490,19 +437,10 @@ def main() -> None:
         )
     else:
         report = run_sweep(
-            spark, args.sf_dir, range(args.start, args.start + args.seeds)
+            spark, args.sf_dir, range(args.start, args.start + args.seeds),
+            args.compare_mode,
         )
-    line = json.dumps(
-        {k: v for k, v in report.items() if k != "failures"}
-        | {"failure_count": report["failure_count"]}
-    )
-    print(line)
-    if report["failures"]:
-        for f in report["failures"][:10]:
-            print(json.dumps(f))
-    if args.out:
-        with open(args.out, "w") as fh:
-            json.dump(report, fh, indent=1)
+    emit(report, args.out)
 
 
 if __name__ == "__main__":

@@ -25,7 +25,7 @@ Where the engine path is Arrow/numpy (semantic-dedup assignment), the
 oracle calls THE SAME numpy expressions, so the float semantics are
 identical by construction, not by tolerance — and since round 9 the
 shared-expression gap itself is closed by the --independent-math sweep
-(run_independent_math_sweep): every returned cosine/cent_cos is
+(independent_math_seed): every returned cosine/cent_cos is
 re-derived with mpmath at 60 significant digits and the engine's pinned
 half-away rounding replicated in arbitrary precision, exact except
 within 1e-12 of a rounding boundary (counted, never silently passed).
@@ -64,11 +64,9 @@ from __future__ import annotations
 import argparse
 import hashlib
 import itertools
-import json
 import math
 import random
 import re
-import time
 from collections import Counter
 
 import numpy as np
@@ -82,6 +80,7 @@ from lime_etl_spark.ops.dedup import (
     PERM_B,
     SIMHASH_BITS,
 )
+from lime_etl_spark.tools.sweep import Sweep, check_family_seed, emit, failed
 
 # ---------------------------------------------------------------------------
 # Pure-Python reference primitives (the oracle side)
@@ -1070,63 +1069,7 @@ FAMILIES = [
 
 
 def check_seed(spark, seed: int, big: bool = False) -> dict:
-    rng = random.Random(seed)
-    rng.big = big  # generators read this to widen their draw ranges
-    total = sum(w for _, w in FAMILIES)
-    pick = rng.uniform(0, total)
-    acc = 0.0
-    fam = FAMILIES[-1][0]
-    for f, w in FAMILIES:
-        acc += w
-        if pick <= acc:
-            fam = f
-            break
-    rec: dict = {"seed": seed}
-    try:
-        ops, errs, rows = fam(spark, rng)
-        rec["ops"] = ops
-        if errs:
-            rec["mismatch"] = errs
-        else:
-            rec["rows"] = rows
-    except Exception as exc:
-        rec["ops"] = [fam.__name__]
-        rec["error"] = f"{type(exc).__name__}: {exc}"
-    return rec
-
-
-def run_sweep(spark, seeds, progress_every: int = 100, big: bool = False) -> dict:
-    t0 = time.time()
-    results, failures = [], []
-    op_hist: Counter = Counter()
-    rows_total = 0
-    for i, seed in enumerate(seeds):
-        rec = check_seed(spark, seed, big=big)
-        if "error" in rec or "mismatch" in rec:
-            failures.append(rec)
-        else:
-            rows_total += rec["rows"]
-        for op in rec.get("ops", []):
-            op_hist[op.split(":")[0]] += 1
-        results.append(rec)
-        if progress_every and (i + 1) % progress_every == 0:
-            print(
-                f"# {i + 1}/{len(seeds)} seeds, {len(failures)} failures, "
-                f"{time.time() - t0:.0f}s",
-                flush=True,
-            )
-    return {
-        "harness": "llmgen (randomized corpora/embeddings vs pure-Python brute-force oracles)",
-        "big_mode": big,
-        "seeds_run": len(results),
-        "seed_min": min(seeds) if len(seeds) else None,
-        "seed_max": max(seeds) if len(seeds) else None,
-        "failures": failures,
-        "failure_count": len(failures),
-        "rows_compared_total": rows_total,
-        "op_histogram": dict(sorted(op_hist.items())),
-        "elapsed_sec": round(time.time() - t0, 1),
-    }
+    return check_family_seed(spark, seed, FAMILIES, big)
 
 
 # ---------------------------------------------------------------------------
@@ -1275,37 +1218,11 @@ def independent_math_seed(spark, seed: int) -> dict:
     return rec
 
 
-def run_independent_math_sweep(spark, seeds) -> dict:
-    t0 = time.time()
-    results, failures = [], []
-    rows_total = 0
-    boundary = 0
-    for seed in seeds:
-        try:
-            rec = independent_math_seed(spark, seed)
-        except Exception as exc:  # pragma: no cover - surfaced in artifact
-            rec = {"seed": seed, "error": f"{type(exc).__name__}: {exc}"}
-        if "error" in rec or "mismatch" in rec:
-            failures.append(rec)
-        else:
-            rows_total += rec["rows"]
-            boundary += rec["boundary_skips"]
-        results.append(rec)
-    return {
-        "harness": (
-            "llmgen --independent-math (engine cosine/cent_cos vs mpmath "
-            "60-digit third implementation; exact on the pinned rounding, "
-            "boundary carve-out counted)"
-        ),
-        "seeds_run": len(results),
-        "seed_min": min(seeds) if len(seeds) else None,
-        "seed_max": max(seeds) if len(seeds) else None,
-        "failures": failures,
-        "failure_count": len(failures),
-        "rows_compared_total": rows_total,
-        "boundary_skips_total": boundary,
-        "elapsed_sec": round(time.time() - t0, 1),
-    }
+def _independent_math_check(spark, seed: int) -> dict:
+    try:
+        return independent_math_seed(spark, seed)
+    except Exception as exc:  # pragma: no cover - surfaced in artifact
+        return {"seed": seed, "error": f"{type(exc).__name__}: {exc}"}
 
 
 def main() -> None:
@@ -1329,21 +1246,27 @@ def main() -> None:
 
     spark = get_spark("llmgen", shuffle_partitions=16 if args.big else 4)
     spark.sparkContext.setLogLevel("ERROR")
+    seeds = range(args.start, args.start + args.seeds)
     if args.independent_math:
-        report = run_independent_math_sweep(
-            spark, range(args.start, args.start + args.seeds)
+        sw = Sweep().run(lambda s: _independent_math_check(spark, s), seeds)
+        report = sw.report(
+            {"harness": (
+                "llmgen --independent-math (engine cosine/cent_cos vs mpmath "
+                "60-digit third implementation; exact on the pinned rounding, "
+                "boundary carve-out counted)"
+            )},
+            histogram=False,
+            tail={"boundary_skips_total": sum(
+                r["boundary_skips"] for r in sw.records if not failed(r)
+            )},
         )
     else:
-        report = run_sweep(
-            spark, range(args.start, args.start + args.seeds), big=args.big
-        )
-    print(json.dumps({k: v for k, v in report.items() if k != "failures"}))
-    if report["failures"]:
-        for f in report["failures"][:10]:
-            print(json.dumps(f))
-    if args.out:
-        with open(args.out, "w") as fh:
-            json.dump(report, fh, indent=1)
+        sw = Sweep().run(lambda s: check_seed(spark, s, args.big), seeds)
+        report = sw.report({
+            "harness": "llmgen (randomized corpora/embeddings vs pure-Python brute-force oracles)",
+            "big_mode": args.big,
+        })
+    emit(report, args.out)
 
 
 if __name__ == "__main__":

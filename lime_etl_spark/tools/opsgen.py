@@ -35,11 +35,9 @@ from __future__ import annotations
 
 import argparse
 import hashlib
-import json
 import math
 import random
 import re
-import time
 from collections import Counter
 from datetime import datetime, timedelta
 
@@ -48,6 +46,7 @@ from lime_etl_spark.tools.llmgen import (
     py_tokens,
     round_half_up,
 )
+from lime_etl_spark.tools.sweep import Sweep, check_family_seed, emit
 
 # ---------------------------------------------------------------------------
 # Oracle primitives
@@ -1120,66 +1119,7 @@ FAMILIES = [
 
 
 def check_seed(spark, seed: int, big: bool = False) -> dict:
-    rng = random.Random(seed)
-    rng.big = big  # generators read this to widen their draw ranges
-    total = sum(w for _, w in FAMILIES)
-    pick = rng.uniform(0, total)
-    acc = 0.0
-    fam = FAMILIES[-1][0]
-    for f, w in FAMILIES:
-        acc += w
-        if pick <= acc:
-            fam = f
-            break
-    rec: dict = {"seed": seed}
-    try:
-        ops, errs, rows = fam(spark, rng)
-        rec["ops"] = ops
-        if errs:
-            rec["mismatch"] = errs
-        else:
-            rec["rows"] = rows
-    except Exception as exc:
-        rec["ops"] = [fam.__name__]
-        rec["error"] = f"{type(exc).__name__}: {exc}"
-    return rec
-
-
-def run_sweep(spark, seeds, progress_every: int = 100, big: bool = False) -> dict:
-    t0 = time.time()
-    results, failures = [], []
-    op_hist: Counter = Counter()
-    rows_total = 0
-    for i, seed in enumerate(seeds):
-        rec = check_seed(spark, seed, big=big)
-        if "error" in rec or "mismatch" in rec:
-            failures.append(rec)
-        else:
-            rows_total += rec["rows"]
-        for op in rec.get("ops", []):
-            op_hist[op.split(":")[0]] += 1
-        results.append(rec)
-        if progress_every and (i + 1) % progress_every == 0:
-            print(
-                f"# {i + 1}/{len(seeds)} seeds, {len(failures)} failures, "
-                f"{time.time() - t0:.0f}s",
-                flush=True,
-            )
-    return {
-        "harness": (
-            "opsgen (randomized corpora/event-logs/change-streams/rule-sets "
-            "vs pure-Python oracles: text, sampling, behavior, quality, graph)"
-        ),
-        "big_mode": big,
-        "seeds_run": len(results),
-        "seed_min": min(seeds) if len(seeds) else None,
-        "seed_max": max(seeds) if len(seeds) else None,
-        "failures": failures,
-        "failure_count": len(failures),
-        "rows_compared_total": rows_total,
-        "op_histogram": dict(sorted(op_hist.items())),
-        "elapsed_sec": round(time.time() - t0, 1),
-    }
+    return check_family_seed(spark, seed, FAMILIES, big)
 
 
 def main() -> None:
@@ -1199,16 +1139,15 @@ def main() -> None:
 
     spark = get_spark("opsgen", shuffle_partitions=16 if args.big else 4)
     spark.sparkContext.setLogLevel("ERROR")
-    report = run_sweep(
-        spark, range(args.start, args.start + args.seeds), big=args.big
+    sw = Sweep().run(
+        lambda s: check_seed(spark, s, args.big),
+        range(args.start, args.start + args.seeds),
     )
-    print(json.dumps({k: v for k, v in report.items() if k != "failures"}))
-    if report["failures"]:
-        for f in report["failures"][:10]:
-            print(json.dumps(f))
-    if args.out:
-        with open(args.out, "w") as fh:
-            json.dump(report, fh, indent=1)
+    harness = (
+        "opsgen (randomized corpora/event-logs/change-streams/rule-sets "
+        "vs pure-Python oracles: text, sampling, behavior, quality, graph)"
+    )
+    emit(sw.report({"harness": harness, "big_mode": args.big}), args.out)
 
 
 if __name__ == "__main__":

@@ -108,7 +108,7 @@ def run_phase(
     cross-process shuffle path, the closest single-host approximation
     of a memory-constrained cluster."""
     from lime_etl_spark.registry import REGISTRY
-    from lime_etl_spark.session import get_spark
+    from lime_etl_spark.session import DEFAULT_LOCAL_DRIVER_MEM, get_spark
 
     extra = {"spark.ui.enabled": "true"}
     if master:
@@ -116,7 +116,7 @@ def run_phase(
 
         extra["spark.executorEnv.PYTHONPATH"] = package_root()
         extra["spark.executor.memory"] = executor_mem or "2g"
-        extra["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+        extra["spark.driver.memory"] = DEFAULT_LOCAL_DRIVER_MEM
     spark = get_spark("spill-check", master=master, extra_conf=extra)
     spark.sparkContext.setLogLevel("ERROR")
     results: dict[str, dict] = {}

@@ -43,17 +43,16 @@ from __future__ import annotations
 import argparse
 import datetime as dt
 import glob
-import json
 import os
 import random
 import shutil
 import tempfile
 import time
 import uuid
-from collections import Counter
 
 from lime_etl_spark import schemas
 from lime_etl_spark.tools.llmgen import compare_sets
+from lime_etl_spark.tools.sweep import Sweep, emit
 
 _TYPES = ["click", "view", "purchase", "scroll", "login"]
 _BASE = dt.datetime(2024, 1, 1, 0, 0, 0)
@@ -588,107 +587,15 @@ def _resume_drain(spark, rng, events_dir, transform, work, mfpt):
     return [tuple(r) for r in spark.read.parquet(sink).collect()]
 
 
-def run_sweep(spark, seeds, progress_every: int = 50) -> dict:
-    t0 = time.time()
-    results, failures = [], []
-    op_hist: Counter = Counter()
-    rows_total = 0
-    workroot = tempfile.mkdtemp(prefix="streamgen_")
-    try:
-        for i, seed in enumerate(seeds):
-            rec = check_seed(spark, seed, workroot)
-            if "error" in rec or "mismatch" in rec:
-                failures.append(rec)
-            else:
-                rows_total += rec["rows"]
-            for op in rec.get("ops", []):
-                op_hist[op.split(":")[0]] += 1
-            results.append(rec)
-            if progress_every and (i + 1) % progress_every == 0:
-                print(
-                    f"# {i + 1}/{len(seeds)} seeds, {len(failures)} failures, "
-                    f"{time.time() - t0:.0f}s",
-                    flush=True,
-                )
-    finally:
-        shutil.rmtree(workroot, ignore_errors=True)
-    return {
-        "harness": "streamgen (random file splits/order/trigger bounds + resume vs batch twin)",
-        "seeds_run": len(results),
-        "seed_min": min(seeds) if len(seeds) else None,
-        "seed_max": max(seeds) if len(seeds) else None,
-        "failures": failures,
-        "failure_count": len(failures),
-        "rows_compared_total": rows_total,
-        "op_histogram": dict(sorted(op_hist.items())),
-        "elapsed_sec": round(time.time() - t0, 1),
-    }
-
-
-def run_sweep_min_variants(
-    spark, start: int, min_per_variant: int, cap: int = 20000
-) -> dict:
-    """Round-9 (r8 verdict task #6): keep drawing seeds until EVERY
-    streaming variant — (tumbling|sliding|session|dedup) x (no prefilter
-    |pre_type|pre_value|pre_user) plus scd2/funnel/quality — has at
-    least ``min_per_variant`` draws; the r8 final block left several
-    fam+prefilter cells at 2-6 draws. ``cap`` bounds the walk (the
-    rarest cell is ~1/32 of draws, so min=20 needs ~2% x 32 x 20 x
-    slack seeds)."""
-    targets = {
-        f"{fam}{pre}"
-        for fam in ("tumbling", "sliding", "session", "dedup")
-        for pre in ("", "+pre_type", "+pre_value", "+pre_user")
-    } | {"scd2", "funnel", "quality"}
-    t0 = time.time()
-    results, failures = [], []
-    op_hist: Counter = Counter()
-    rows_total = 0
-    workroot = tempfile.mkdtemp(prefix="streamgen_mv_")
-    seed = start
-    try:
-        while seed < start + cap:
-            rec = check_seed(spark, seed, workroot)
-            if "error" in rec or "mismatch" in rec:
-                failures.append(rec)
-            else:
-                rows_total += rec["rows"]
-            for op in rec.get("ops", []):
-                op_hist[op.split(":")[0]] += 1
-            results.append(rec)
-            seed += 1
-            if len(results) % 50 == 0:
-                short = min(
-                    (op_hist.get(t, 0) for t in targets), default=0
-                )
-                print(
-                    f"# {len(results)} seeds, {len(failures)} failures, "
-                    f"min-variant={short}, {time.time() - t0:.0f}s",
-                    flush=True,
-                )
-            if all(op_hist.get(t, 0) >= min_per_variant for t in targets):
-                break
-    finally:
-        shutil.rmtree(workroot, ignore_errors=True)
-    return {
-        "harness": (
-            "streamgen --min-variant (random file splits/order/trigger "
-            "bounds + resume vs batch twin; sweep runs until every "
-            "variant has the floor)"
-        ),
-        "min_per_variant": min_per_variant,
-        "variants_floor_met": all(
-            op_hist.get(t, 0) >= min_per_variant for t in targets
-        ),
-        "seeds_run": len(results),
-        "seed_min": start,
-        "seed_max": seed - 1,
-        "failures": failures,
-        "failure_count": len(failures),
-        "rows_compared_total": rows_total,
-        "op_histogram": dict(sorted(op_hist.items())),
-        "elapsed_sec": round(time.time() - t0, 1),
-    }
+# every streaming variant the --min-variant floor covers: (tumbling|
+# sliding|session|dedup) x (no prefilter|pre_type|pre_value|pre_user)
+# plus scd2/funnel/quality — the r8 final block left several
+# fam+prefilter cells at 2-6 draws
+VARIANTS = [
+    f"{fam}{pre}"
+    for fam in ("tumbling", "sliding", "session", "dedup")
+    for pre in ("", "+pre_type", "+pre_value", "+pre_user")
+] + ["scd2", "funnel", "quality"]
 
 
 def main() -> None:
@@ -707,19 +614,36 @@ def main() -> None:
 
     spark = get_spark("streamgen", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
-    if args.min_variant:
-        report = run_sweep_min_variants(
-            spark, args.start, args.min_variant, cap=max(args.seeds, 5000)
+    floor = args.min_variant
+    # the rarest variant is ~1/32 of draws, so the floor walk is capped
+    # at max(--seeds, 5000) seeds
+    n = max(args.seeds, 5000) if floor else args.seeds
+    workroot = tempfile.mkdtemp(prefix="streamgen_")
+    try:
+        sw = Sweep().run(
+            lambda s: check_seed(spark, s, workroot),
+            range(args.start, args.start + n),
+            stop=(lambda sw: sw.floor_met(VARIANTS, floor)) if floor else None,
+            note=(lambda sw: f", min-variant={min(sw.ops[t] for t in VARIANTS)}")
+            if floor else None,
         )
+    finally:
+        shutil.rmtree(workroot, ignore_errors=True)
+    if floor:
+        head = {
+            "harness": (
+                "streamgen --min-variant (random file splits/order/trigger "
+                "bounds + resume vs batch twin; sweep runs until every "
+                "variant has the floor)"
+            ),
+            "min_per_variant": floor,
+            "variants_floor_met": sw.floor_met(VARIANTS, floor),
+        }
     else:
-        report = run_sweep(spark, range(args.start, args.start + args.seeds))
-    print(json.dumps({k: v for k, v in report.items() if k != "failures"}))
-    if report["failures"]:
-        for f in report["failures"][:10]:
-            print(json.dumps(f))
-    if args.out:
-        with open(args.out, "w") as fh:
-            json.dump(report, fh, indent=1)
+        head = {
+            "harness": "streamgen (random file splits/order/trigger bounds + resume vs batch twin)"
+        }
+    emit(sw.report(head), args.out)
 
 
 if __name__ == "__main__":

@@ -280,3 +280,189 @@ def test_gencheck_hash_canon_unifies_exact_numerics():
     naive = dt.datetime(2026, 1, 2, 3, 4, 5)
     aware = dt.datetime(2026, 1, 2, 3, 4, 5, tzinfo=dt.timezone.utc)
     assert _canon_cell(naive) == _canon_cell(aware)
+
+
+def test_tool_sessions_take_validated_driver_heap():
+    """fault_check's retry and kill phases and spill_check's cluster
+    phase size the driver heap from the session factory: unset, it is
+    the host-sized default (not a fixed 16g/8g); malformed, the tool
+    raises before any session starts. ``get_spark`` is replaced by a
+    stub that records ``extra_conf`` and stops the phase, in a fresh
+    interpreter so the session module reads the env at import."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from lime_etl_spark.session import _local_driver_mem
+
+    script = """
+import json
+import lime_etl_spark.session as session
+from lime_etl_spark.tools import fault_check, spill_check
+
+seen = []
+
+class Stop(Exception):
+    pass
+
+def stub(app_name, master=None, shuffle_partitions=None, extra_conf=None):
+    seen.append(extra_conf["spark.driver.memory"])
+    raise Stop
+
+session.get_spark = stub
+for phase in (
+    lambda: fault_check.phase_retry("/nonexistent", "/nonexistent/o.json"),
+    lambda: fault_check.phase_kill("/nonexistent", "/nonexistent/o.json", "1g"),
+    lambda: spill_check.run_phase(
+        "/nonexistent", [], "/nonexistent/o.json", master="local-cluster[1,1,1024]"
+    ),
+):
+    try:
+        phase()
+    except Stop:
+        pass
+print(json.dumps(seen))
+"""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def run(mem):
+        env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_DRIVER_MEM"}
+        env["PYTHONPATH"] = repo
+        if mem is not None:
+            env["SPARK_GRAFT_DRIVER_MEM"] = mem
+        return subprocess.run(
+            [sys.executable, "-c", script], env=env, capture_output=True, text=True,
+            timeout=120,
+        )
+
+    unset = run(None)
+    assert unset.returncode == 0, unset.stderr
+    assert json.loads(unset.stdout.splitlines()[-1]) == [_local_driver_mem(None)] * 3
+
+    bad = run("16gb")
+    assert bad.returncode != 0
+    assert "SPARK_GRAFT_DRIVER_MEM must be" in bad.stderr
+
+
+def test_sweep_tallies_records_and_stops_at_floor(capsys):
+    """The shared seed loop: passing records add their rows, mismatch and
+    error records are failures, every record's ops feed the histogram,
+    a None record is drawn but not counted, and a stop predicate ends
+    the sweep at the first seed where it holds."""
+    from lime_etl_spark.tools import sweep
+
+    def check(seed):
+        if seed == 12:
+            return None  # e.g. over the checker's wall budget
+        if seed % 5 == 3:
+            return {"seed": seed, "ops": ["b:x=1"], "mismatch": ["diff"]}
+        if seed % 5 == 4:
+            return {"seed": seed, "ops": ["c"], "error": "boom"}
+        return {"seed": seed, "ops": ["a:k=1", "a:k=2"], "rows": seed}
+
+    sw = sweep.Sweep().run(check, range(10, 20))
+    rep = sw.report({"harness": "fake"})
+    assert list(rep) == [
+        "harness", "seeds_run", "seed_min", "seed_max", "failures",
+        "failure_count", "rows_compared_total", "op_histogram", "elapsed_sec",
+    ]
+    assert (rep["seeds_run"], rep["seed_min"], rep["seed_max"]) == (9, 10, 19)
+    assert [f["seed"] for f in rep["failures"]] == [13, 14, 18, 19]
+    assert rep["failure_count"] == 4
+    assert rep["rows_compared_total"] == 10 + 11 + 15 + 16 + 17
+    assert rep["op_histogram"] == {"a": 10, "b": 2, "c": 2}
+
+    two = sweep.Sweep(label=lambda op: ":".join(op.split(":")[:2])).run(
+        check, range(10, 15)
+    )
+    assert dict(two.ops) == {"a:k=1": 2, "a:k=2": 2, "b:x=1": 1, "c": 1}
+
+    floor = sweep.Sweep().run(
+        check, range(10, 1000), stop=lambda sw: sw.floor_met(["b", "c"], 2)
+    )
+    assert floor.drawn == list(range(10, 20))  # c reaches 2 at seed 19
+    rep = floor.report({}, histogram=False, tail={"extra": 1})
+    assert "op_histogram" not in rep and list(rep)[-2:] == ["extra", "elapsed_sec"]
+
+    empty = sweep.Sweep().run(check, range(0)).report({})
+    assert (empty["seeds_run"], empty["seed_min"], empty["seed_max"]) == (0, None, None)
+
+    sweep.emit(rep, None)
+    line = capsys.readouterr().out.splitlines()
+    assert len(line) == 5 and '"failures"' not in line[0]  # report + 4 failures
+
+
+def test_family_pick_seed_mapping_pinned():
+    """The weighted family pick must consume the RNG exactly as the
+    committed GENCHECK artifacts were drawn: the seed -> family names
+    of composegen, opsgen and llmgen over seeds 0-499, pinned as the
+    sha256 of the comma-joined names."""
+    import hashlib
+    import random
+
+    from lime_etl_spark.tools import composegen, llmgen, opsgen
+    from lime_etl_spark.tools.sweep import pick_family
+
+    want = {
+        composegen: "22bb59a2c93dd33e4c2f9d858f48971efa84ada1582337da909f05d215f02e4c",
+        opsgen: "a0f1a585741f792013bd11d1d6356c6748f1ef9e1869dab7aa0a9e8a54af52ae",
+        llmgen: "da1ca93e6db54f723a91a2a534ca2ca61c54bc95bdae7c82ae85e898a4849b05",
+    }
+    for mod, digest in want.items():
+        names = ",".join(
+            pick_family(random.Random(s), mod.FAMILIES).__name__ for s in range(500)
+        )
+        assert hashlib.sha256(names.encode()).hexdigest() == digest, mod.__name__
+
+
+def test_gencheck_min_op_targets_and_times_out(monkeypatch):
+    """gencheck --min-op with fakes in place of Spark, DuckDB and qgen:
+    a seed over its wall budget is listed, not counted, and its DuckDB
+    connection is closed and replaced; the plan-only scan then targets
+    the first seed that draws the op still under the floor, and the
+    sweep stops once the floor is met."""
+    import threading
+
+    from lime_etl_spark.tools import gencheck as gc
+    from lime_etl_spark.tools import qgen
+
+    released = threading.Event()
+    conns = []
+
+    class Duck:
+        closed = False
+
+        def interrupt(self):
+            released.set()
+
+        def close(self):
+            self.closed = True
+
+    class Spark:
+        class sparkContext:
+            @staticmethod
+            def cancelAllJobs():
+                pass
+
+    class Rel:
+        def __init__(self, seed):
+            self.ops = ["base", "asof:k"] if seed == 1_000_003 else ["base"]
+
+    def check_seed(spark, duck, seed, sf_dir, compare_mode):
+        if seed == 1:
+            released.wait(30)  # hangs until the timeout interrupts it
+        return {"seed": seed, "ops": Rel(seed).ops, "rows": 1}
+
+    monkeypatch.setattr(gc, "QGEN_OPS", ["asof", "base"])
+    monkeypatch.setattr(gc, "check_seed", check_seed)
+    monkeypatch.setattr(gc, "duck_connect", lambda sf_dir: conns.append(Duck()) or conns[-1])
+    monkeypatch.setattr(qgen, "generate_query", lambda seed, spark, sf_dir: Rel(seed))
+
+    rep = gc.run_sweep_min_ops(Spark(), "unused", 0, 3, 1, seed_timeout=0.5)
+    assert rep["timed_out_seeds"] == [1]
+    assert rep["targeted_seeds"] == [1_000_003]
+    assert (rep["seeds_run"], rep["seed_min"], rep["seed_max"]) == (3, 0, 2)
+    assert rep["ops_floor_met"] and rep["op_histogram"] == {"asof": 1, "base": 3}
+    assert rep["rows_compared_total"] == 3 and rep["failure_count"] == 0
+    assert len(conns) == 2 and all(c.closed for c in conns)
