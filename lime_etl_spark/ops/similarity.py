@@ -52,6 +52,39 @@ def _gnorm(a: Column) -> Column:
     return F.greatest(_norm(a), F.lit(1e-150))
 
 
+def _cosine(a: str, b: str, digits: int = 6) -> Column:
+    """Cosine of two double-array columns, rounded to ``digits`` — the
+    one score expression every JVM path (and its DuckDB oracle) ranks
+    or thresholds on."""
+    return F.round(
+        _dot(F.col(a), F.col(b)) / (_gnorm(F.col(a)) * _gnorm(F.col(b))), digits
+    )
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of (query_id, neighbor_id, score) rows by score
+    desc then neighbor id asc — a total order both engines agree on."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "score")
+    )
+
+
+def _pairs_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Score candidate pairs (query_id, qv) x (neighbor_id, cv) by
+    cosine, drop self-matches, keep each query's top-k."""
+    return _rank_topk(
+        pairs.filter(F.col("query_id") != F.col("neighbor_id")).select(
+            "query_id", "neighbor_id", _cosine("qv", "cv").alias("score")
+        ),
+        k,
+    )
+
+
 def with_norm(df: DataFrame, vec_col: str = "embedding", out: str = "norm") -> DataFrame:
     return df.withColumn(out, F.round(_norm(_to_double(F.col(vec_col))), 6))
 
@@ -84,27 +117,7 @@ def cosine_topk(
             F.col(id_col).alias("neighbor_id"), _to_double(F.col(vec_col)).alias("cv")
         )
     )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv"))
-                / (_gnorm(F.col("qv")) * _gnorm(F.col("cv"))),
-                6,
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _pairs_topk(q.crossJoin(c), k)
 
 
 # ---------------------------------------------------------------------------
@@ -280,6 +293,30 @@ def _explode_probes(side: DataFrame, masks: "list[int]", cols: "list[str]") -> D
     return side.select(*cols, F.explode(probes).alias("bucket"))
 
 
+def _size_planes(
+    n_planes: "int | None", df: DataFrame, stats: "CorpusStats | None"
+) -> int:
+    """``n_planes``, or when None the ``recommended_n_planes`` of the
+    corpus count — eager: ``df.count()`` runs unless ``stats`` carries
+    it. max(1,·): an empty corpus sizes to the 1-plane minimum instead
+    of tripping the helper's explicit-input validation."""
+    if n_planes is not None:
+        return n_planes
+    return recommended_n_planes(max(1, stats.n if stats is not None else df.count()))
+
+
+def _bucketed(
+    df: DataFrame, dim: int, n_planes: int, id_col: str, vec_col: str, names
+) -> DataFrame:
+    """One LSH side: (id, double vector, bucket) under ``names`` — the
+    (query_id, qv) probe side or the (neighbor_id, cv) corpus side."""
+    return with_lsh_bucket(df, dim, n_planes, vec_col).select(
+        F.col(id_col).alias(names[0]),
+        _to_double(F.col(vec_col)).alias(names[1]),
+        F.col("bucket"),
+    )
+
+
 def lsh_bucketed_topk(
     queries: DataFrame,
     candidates: DataFrame,
@@ -318,8 +355,8 @@ def lsh_bucketed_topk(
     ``target_recall`` (round-6): calibrate the knobs empirically
     instead of guessing — the cheapest (n_planes, multi_probe) on the
     descend-planes/deepen-probing ladder whose measured recall@k on a
-    64-probe sample meets the target (see calibrate_lsh; the IVF path
-    got the same treatment in round 5, closing the asymmetric-API gap).
+    64-probe sample meets the target (see calibrate_lsh; ivf_topk's
+    calibrate_nprobe runs the same _recall_ladder).
     Construction is eager on this path (the calibration trials run at
     call time). Explicit-parameter calls are untouched (the
     oracle-pinned registry path passes n_planes=5 and no target).
@@ -341,23 +378,14 @@ def lsh_bucketed_topk(
                 "cosine_topk if that matters.",
                 stacklevel=2,
             )
-    if n_planes is None:
-        # max(1,·): an empty corpus sizes to the 1-plane minimum
-        # instead of tripping the helper's explicit-input validation
-        # (stats carrier skips the eager count — see CorpusStats)
-        n = stats.n if stats is not None else candidates.count()
-        n_planes = recommended_n_planes(max(1, n))
-    qb0 = with_lsh_bucket(queries, dim, n_planes, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        _to_double(F.col(vec_col)).alias("qv"),
-        F.col("bucket"),
+    n_planes = _size_planes(n_planes, candidates, stats)
+    return _lsh_topk_from_bucketed(
+        _bucketed(queries, dim, n_planes, id_col, vec_col, ("query_id", "qv")),
+        _bucketed(candidates, dim, n_planes, id_col, vec_col, ("neighbor_id", "cv")),
+        n_planes,
+        multi_probe,
+        k,
     )
-    cb = with_lsh_bucket(candidates, dim, n_planes, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        _to_double(F.col(vec_col)).alias("cv"),
-        F.col("bucket"),
-    )
-    return _lsh_topk_from_bucketed(qb0, cb, n_planes, multi_probe, k)
 
 
 def _lsh_topk_from_bucketed(
@@ -370,27 +398,53 @@ def _lsh_topk_from_bucketed(
     qb = _explode_probes(
         qb0, _probe_masks(n_planes, multi_probe), ["query_id", "qv"]
     )
-    scored = (
-        qb.join(cb, "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv"))
-                / (_gnorm(F.col("qv")) * _gnorm(F.col("cv"))),
-                6,
-            ).alias("score"),
-        )
+    return _pairs_topk(qb.join(cb, "bucket"), k)
+
+
+def _recall_ladder(
+    queries: DataFrame,
+    candidates: DataFrame,
+    k: int,
+    target_recall: float,
+    sample: int,
+    id_col: str,
+    vec_col: str,
+    rungs: "list[tuple]",
+    search,
+) -> tuple:
+    """Measure-and-adjust, the one recall dial of every ANN path: walk
+    ``rungs`` cheapest first, measuring recall@k of ``search(probe_set,
+    *rung)`` against the EXACT top-k on a deterministic ``sample``-probe
+    set, and return ``(*rung, recall)`` for the first rung that meets
+    ``target_recall``, else for the last rung.
+
+    Cost is bounded: one exact pass for the sample's ground truth
+    (≤ sample·k pairs collected to the driver, so trials never
+    re-execute the exact lineage), then one sample-search per rung.
+    Zero ground-truth pairs (empty/degenerate probe set) leave nothing
+    to measure: returns ``(*rungs[0], NaN)``, never a fabricated 1.0 —
+    NaN also compares False against any target, so callers neither warn
+    nor claim the target was met."""
+    if not 0.0 < target_recall <= 1.0:
+        raise ValueError(f"target_recall in (0, 1], got {target_recall}")
+    probe_set = queries.select(id_col, vec_col).orderBy(id_col).limit(sample)
+
+    def pairs(df: DataFrame) -> set:
+        return {
+            (r.query_id, r.neighbor_id)
+            for r in df.select("query_id", "neighbor_id").collect()
+        }
+
+    exact = pairs(
+        cosine_topk(probe_set, candidates, k=k, id_col=id_col, vec_col=vec_col)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    if not exact:
+        return (*rungs[0], float("nan"))
+    for rung in rungs:
+        recall = len(exact & pairs(search(probe_set, *rung))) / len(exact)
+        if recall >= target_recall:
+            break
+    return (*rung, recall)
 
 
 def calibrate_lsh(
@@ -405,13 +459,11 @@ def calibrate_lsh(
     vec_col: str = "embedding",
     stats: "CorpusStats | None" = None,
 ) -> "tuple[int, int, float]":
-    """Measure-and-adjust for hyperplane LSH — the mirror of
-    ``calibrate_nprobe`` (round-6: the IVF path had a measured recall
-    knob, LSH had guesswork). Walks the cheapest-first ladder
-    (start planes, depth 1) → (start planes, depth 2) → (fewer planes,
-    depth 2) → ... → (1 plane), measuring recall@k against the EXACT
-    top-k on a deterministic ``sample``-probe set, and stops at the
-    first rung meeting ``target_recall``.
+    """Measure-and-adjust for hyperplane LSH (round-6: the IVF path had
+    a measured recall knob, LSH had guesswork) on the shared
+    ``_recall_ladder``. Rungs, cheapest first: (start planes, depth 1)
+    → (start planes, depth 2) → (fewer planes, depth 2) → ... →
+    (1 plane); the first rung meeting ``target_recall`` wins.
 
     Why this ladder: deepening multi-probe keeps bucket sizes (and the
     corpus-side shuffle) fixed while probing more buckets — the cheap
@@ -420,47 +472,24 @@ def calibrate_lsh(
     probe set covers the whole bucket space, so the ladder converges to
     exact-search recall (1.0 modulo ties at the k-boundary).
 
-    Cost is bounded exactly like calibrate_nprobe: one exact pass for
-    the sample's ground truth (≤ sample·k pairs collected), then one
-    sample-search per rung, ≤ 2 + start_n_planes rungs. Returns
-    (n_planes, multi_probe, measured_recall); zero ground-truth pairs
-    (empty/degenerate probe set) returns NaN recall, never a
-    fabricated 1.0.
+    Cost: one exact pass plus ≤ 2 + start_n_planes sample-searches.
+    Returns (n_planes, multi_probe, measured_recall); zero ground-truth
+    pairs (empty/degenerate probe set) returns (start planes, 1, NaN).
     """
-    if not 0.0 < target_recall <= 1.0:
-        raise ValueError(f"target_recall in (0, 1], got {target_recall}")
-    if start_n_planes is None:
-        n = stats.n if stats is not None else candidates.count()
-        start_n_planes = recommended_n_planes(max(1, n))
-    probe_set = queries.select(id_col, vec_col).orderBy(id_col).limit(sample)
-    exact = cosine_topk(probe_set, candidates, k=k, id_col=id_col, vec_col=vec_col)
-    exact_pairs = {
-        (r.query_id, r.neighbor_id)
-        for r in exact.select("query_id", "neighbor_id").collect()
-    }
-    if not exact_pairs:
-        return start_n_planes, 1, float("nan")
-    ladder = [(start_n_planes, 1)]
+    start_n_planes = _size_planes(start_n_planes, candidates, stats)
+    rungs = [(start_n_planes, 1)]
     if start_n_planes >= 2:
-        ladder.append((start_n_planes, 2))
+        rungs.append((start_n_planes, 2))
         # depth is capped at the plane count (at 1 plane, depth 1
         # already covers the whole 2-bucket space)
-        ladder += [(p, min(2, p)) for p in range(start_n_planes - 1, 0, -1)]
-    last = ladder[0] + (0.0,)
-    for planes, depth in ladder:
-        approx = lsh_bucketed_topk(
-            probe_set, candidates, dim, k=k, n_planes=planes,
+        rungs += [(p, min(2, p)) for p in range(start_n_planes - 1, 0, -1)]
+    return _recall_ladder(
+        queries, candidates, k, target_recall, sample, id_col, vec_col, rungs,
+        lambda probes, planes, depth: lsh_bucketed_topk(
+            probes, candidates, dim, k=k, n_planes=planes,
             multi_probe=depth, id_col=id_col, vec_col=vec_col,
-        )
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in approx.select("query_id", "neighbor_id").collect()
-        }
-        recall = len(exact_pairs & got) / len(exact_pairs)
-        last = (planes, depth, recall)
-        if recall >= target_recall:
-            return last
-    return last
+        ),
+    )
 
 
 def _write_parquet_replace(df: DataFrame, dest: str, fs) -> None:
@@ -488,6 +517,79 @@ def _write_parquet_replace(df: DataFrame, dest: str, fs) -> None:
         raise IOError(f"publish rename {tmp} -> {dest} failed")
 
 
+def _publish_index(
+    path: str, manifest_name: str, parts, manifest: dict, reread: str
+) -> DataFrame:
+    """Save half of the index manifest protocol (LSHIndex, IVFIndex):
+    swap-write each ``(name, frame)`` part under ``path``, then publish
+    the manifest. Returns part ``reread`` read back from the published
+    files: the pre-save plan may lazily reference part files the swap
+    just deleted (a loaded index re-saved to its own path), so the
+    caller re-binds to it to stay searchable (round-8 advisor finding:
+    load → save → search died with FILE_NOT_EXIST)."""
+    from lime_etl_spark.io.fsutil import HadoopFS
+
+    spark = parts[0][1].sparkSession
+    root = path.rstrip("/")
+    fs = HadoopFS(spark, path)
+    # UNPUBLISH FIRST on re-save: the manifest must be the LAST thing
+    # to exist — leaving a previous save's manifest published while the
+    # parts below are rewritten would let a crash mid-rewrite load as a
+    # valid index over torn parquet; delete on a missing path is a no-op
+    fs.delete(f"{root}/{manifest_name}")
+    for name, df in parts:
+        _write_parquet_replace(df, f"{root}/{name}", fs)
+    fs.write_json_atomic(f"{root}/{manifest_name}", manifest)
+    return spark.read.parquet(f"{root}/{reread}")
+
+
+def _load_manifest(
+    spark,
+    path: str,
+    manifest_name: str,
+    kind: str,
+    expected_fingerprint: "str | None",
+    built_by: str,
+) -> dict:
+    """Load half of the index manifest protocol: the published manifest
+    of the ``kind`` ("LSH"/"IVF") index at ``path``. Refuses
+    (ValueError) a missing manifest (a save that died mid-write), a
+    torn or unreadable one, and one whose saved corpus_fingerprint is
+    not ``expected_fingerprint`` — a stale index silently drops every
+    vector added since it was ``built_by`` ("assignment"/"training"),
+    so the mismatch must be loud, not a recall degradation discovered
+    weeks later. expected_fingerprint=None skips the staleness check
+    (the caller owns corpus-immutability some other way)."""
+    from lime_etl_spark.io.fsutil import HadoopFS
+
+    fs = HadoopFS(spark, path)
+    mp = path.rstrip("/") + "/" + manifest_name
+    if not fs.exists(mp):
+        raise ValueError(f"no published {kind} index at {path} (missing manifest)")
+    try:
+        manifest = fs.read_json(mp)
+    except (ValueError, UnicodeDecodeError) as ex:
+        raise ValueError(
+            f"torn {kind} index manifest at {mp}; re-save the index"
+        ) from ex
+    except Exception as ex:
+        # e.g. ChecksumException on a checksummed FS — a manifest that
+        # cannot be read for ANY reason means the index is unusable;
+        # surface one loud refusal with the cause chained, not a py4j
+        # traceback
+        raise ValueError(
+            f"unreadable {kind} index manifest at {mp}; re-save the index"
+        ) from ex
+    saved = manifest.get("corpus_fingerprint")
+    if expected_fingerprint is not None and saved != expected_fingerprint:
+        raise ValueError(
+            f"stale {kind} index: saved corpus_fingerprint {saved!r} != expected "
+            f"{expected_fingerprint!r} — the corpus changed since {built_by}; "
+            f"rebuild with {kind.lower()}_index(...)"
+        )
+    return manifest
+
+
 class LSHIndex:
     """A materialized hyperplane-LSH index: the bucketed corpus
     (neighbor_id, cv, bucket) plus the (dim, n_planes) that regenerate
@@ -499,8 +601,9 @@ class LSHIndex:
     deterministic (``_hyperplanes``), so only (dim, n_planes) ride the
     manifest; the ASSIGNMENT is the expensive half at 1e9 vectors (one
     full-corpus pass of n_planes dot products) and is what the parquet
-    materialization saves. Same write-then-publish manifest protocol
-    and stale-corpus fingerprint refusal as IVFIndex.
+    materialization saves. The write-then-publish manifest protocol
+    and stale-corpus fingerprint refusal are IVFIndex's
+    (``_publish_index`` / ``_load_manifest``).
     """
 
     MANIFEST = "_LSH_INDEX_MANIFEST.json"
@@ -524,29 +627,18 @@ class LSHIndex:
         keep lazily reading the pre-swap part files it just replaced
         (round-8 advisor finding: load → save → lsh_search died with
         FILE_NOT_EXIST)."""
-        from lime_etl_spark.io.fsutil import HadoopFS
-
-        spark = self.bucketed.sparkSession
-        fs = HadoopFS(spark, path)
-        mp = path.rstrip("/") + "/" + self.MANIFEST
-        # unpublish first: the manifest must be the LAST artifact to
-        # exist, or a crash mid-rewrite loads torn parquet as valid
-        fs.delete(mp)
-        _write_parquet_replace(
-            self.bucketed, path.rstrip("/") + "/bucketed", fs
-        )
-        fs.write_json_atomic(
-            mp,
+        self.bucketed = _publish_index(
+            path,
+            self.MANIFEST,
+            [("bucketed", self.bucketed)],
             {
                 "version": 1,
                 "dim": int(self.dim),
                 "n_planes": int(self.n_planes),
                 "corpus_fingerprint": corpus_fingerprint,
             },
+            "bucketed",
         )
-        # re-bind to the published files: the pre-save plan may lazily
-        # reference part files the swap just deleted (load→save→search)
-        self.bucketed = spark.read.parquet(path.rstrip("/") + "/bucketed")
 
 
 def lsh_index(
@@ -561,15 +653,12 @@ def lsh_index(
     (n_planes=None sizes from the corpus count, eagerly, exactly like
     the search path's default; pass ``stats`` to reuse a one-pass
     CorpusStats instead)."""
-    if n_planes is None:
-        n = stats.n if stats is not None else candidates.count()
-        n_planes = recommended_n_planes(max(1, n))
-    cb = with_lsh_bucket(candidates, dim, n_planes, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        _to_double(F.col(vec_col)).alias("cv"),
-        F.col("bucket"),
+    n_planes = _size_planes(n_planes, candidates, stats)
+    return LSHIndex(
+        dim,
+        n_planes,
+        _bucketed(candidates, dim, n_planes, id_col, vec_col, ("neighbor_id", "cv")),
     )
-    return LSHIndex(dim, n_planes, cb)
 
 
 def lsh_index_load(
@@ -577,36 +666,13 @@ def lsh_index_load(
 ) -> LSHIndex:
     """Load a saved LSH index WITHOUT recomputing the assignment.
 
-    Refusals mirror ivf_index_load: missing manifest (save died
-    mid-write) and fingerprint mismatch (corpus changed since
-    assignment) raise ValueError; expected_fingerprint=None skips the
-    staleness check."""
-    from lime_etl_spark.io.fsutil import HadoopFS
-
-    fs = HadoopFS(spark, path)
-    mp = path.rstrip("/") + "/" + LSHIndex.MANIFEST
-    if not fs.exists(mp):
-        raise ValueError(f"no published LSH index at {path} (missing manifest)")
-    try:
-        manifest = fs.read_json(mp)
-    except (ValueError, UnicodeDecodeError) as ex:
-        raise ValueError(
-            f"torn LSH index manifest at {mp}; re-save the index"
-        ) from ex
-    except Exception as ex:
-        raise ValueError(
-            f"unreadable LSH index manifest at {mp}; re-save the index"
-        ) from ex
-    if (
-        expected_fingerprint is not None
-        and manifest.get("corpus_fingerprint") != expected_fingerprint
-    ):
-        raise ValueError(
-            "stale LSH index: saved corpus_fingerprint "
-            f"{manifest.get('corpus_fingerprint')!r} != expected "
-            f"{expected_fingerprint!r} — the corpus changed since assignment; "
-            "rebuild with lsh_index(...)"
-        )
+    Missing, torn or unreadable manifests (save died mid-write) and a
+    fingerprint mismatch (corpus changed since assignment) raise
+    ValueError (see _load_manifest); expected_fingerprint=None skips
+    the staleness check."""
+    manifest = _load_manifest(
+        spark, path, LSHIndex.MANIFEST, "LSH", expected_fingerprint, "assignment"
+    )
     bucketed = spark.read.parquet(path.rstrip("/") + "/bucketed")
     return LSHIndex(manifest["dim"], manifest["n_planes"], bucketed)
 
@@ -623,54 +689,32 @@ def calibrate_lsh_depth(
     """calibrate_lsh for a PERSISTED index (round-8: the index that
     exists precisely for the 1e9-vector user was the one path without
     the recall dial — r7 verdict task #7). The saved assignment bakes
-    in n_planes, so the only free knob is probing DEPTH: walk depth
-    1 → 2 → ... → n_planes over the LOADED bucketed corpus (no
-    re-assignment — that is the index's whole point), measure recall@k
-    on a deterministic ``sample``-probe set against the exact top-k
-    over the same saved vectors, stop at the first depth meeting
-    ``target_recall``. Depth n_planes probes the full bucket space, so
-    the ladder converges to exact-search recall (1.0 modulo ties at
-    the k-boundary) — if the target is unreachable even there, the
-    answer is rebuilding with fewer planes, and the NaN/shortfall
-    semantics match calibrate_lsh. Returns (multi_probe, measured).
+    in n_planes, so the only free knob is probing DEPTH: the
+    ``_recall_ladder`` rungs are depth 1 → 2 → ... → n_planes over the
+    LOADED bucketed corpus (no re-assignment — that is the index's
+    whole point), with the exact top-k taken over the same saved
+    vectors. Depth n_planes probes the full bucket space, so the
+    ladder converges to exact-search recall (1.0 modulo ties at the
+    k-boundary) — if the target is unreachable even there, the answer
+    is rebuilding with fewer planes. Returns (multi_probe, measured);
+    (1, NaN) when there is no ground truth.
 
     Cost: one exact pass on ≤ sample probes vs the saved corpus, then
     ≤ n_planes sample-searches — each reuses the persisted assignment,
     never rescanning the raw corpus."""
-    if not 0.0 < target_recall <= 1.0:
-        raise ValueError(f"target_recall in (0, 1], got {target_recall}")
-    probe_set = queries.select(id_col, vec_col).orderBy(id_col).limit(sample)
     # the saved assignment IS the corpus (neighbor_id, cv) — exact
     # ground truth comes from the same vectors the index will search
     corpus = index.bucketed.select(
         F.col("neighbor_id").alias(id_col), F.col("cv").alias(vec_col)
     )
-    exact = cosine_topk(probe_set, corpus, k=k, id_col=id_col, vec_col=vec_col)
-    exact_pairs = {
-        (r.query_id, r.neighbor_id)
-        for r in exact.select("query_id", "neighbor_id").collect()
-    }
-    if not exact_pairs:
-        return 1, float("nan")
-    qb0 = with_lsh_bucket(probe_set, index.dim, index.n_planes, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        _to_double(F.col(vec_col)).alias("qv"),
-        F.col("bucket"),
+    return _recall_ladder(
+        queries, corpus, k, target_recall, sample, id_col, vec_col,
+        # depth 0 is the whole bucket space of a 0-plane index
+        [(depth,) for depth in range(min(1, index.n_planes), index.n_planes + 1)],
+        lambda probes, depth: lsh_search(
+            probes, index, k=k, multi_probe=depth, id_col=id_col, vec_col=vec_col
+        ),
     )
-    last = (1, 0.0)
-    for depth in range(1, index.n_planes + 1):
-        approx = _lsh_topk_from_bucketed(
-            qb0, index.bucketed, index.n_planes, depth, k
-        )
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in approx.select("query_id", "neighbor_id").collect()
-        }
-        recall = len(exact_pairs & got) / len(exact_pairs)
-        last = (depth, recall)
-        if recall >= target_recall:
-            return last
-    return last
 
 
 def lsh_search(
@@ -711,13 +755,14 @@ def lsh_search(
                 "cosine_topk if that matters.",
                 stacklevel=2,
             )
-    qb0 = with_lsh_bucket(queries, index.dim, index.n_planes, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        _to_double(F.col(vec_col)).alias("qv"),
-        F.col("bucket"),
-    )
     return _lsh_topk_from_bucketed(
-        qb0, index.bucketed, index.n_planes, multi_probe, k
+        _bucketed(
+            queries, index.dim, index.n_planes, id_col, vec_col, ("query_id", "qv")
+        ),
+        index.bucketed,
+        index.n_planes,
+        multi_probe,
+        k,
     )
 
 
@@ -812,17 +857,37 @@ def cosine_topk_arrow(
             )
 
     c = ensure_parallelism(candidates.select(id_col, vec_col))
-    scored = c.mapInPandas(
-        kernel, "query_id bigint, neighbor_id bigint, score double"
+    return _rank_topk(
+        c.mapInPandas(kernel, "query_id bigint, neighbor_id bigint, score double"),
+        k,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+
+
+def _near_dup_sides(
+    df: DataFrame,
+    dim: int,
+    n_planes: "int | None",
+    multi_probe: int,
+    id_col: str,
+    vec_col: str,
+    stats: "CorpusStats | None",
+) -> "tuple[DataFrame, DataFrame]":
+    """Candidate sides of bucketed near-dup pair search over one
+    bucketing of ``df``: (id_a, ea, bucket) exploded to every probed
+    bucket, and (id_b, eb, bucket) at its home bucket only."""
+    n_planes = _size_planes(n_planes, df, stats)
+    b = with_lsh_bucket(df, dim, n_planes, vec_col)
+
+    def side(id_as: str, vec_as: str) -> DataFrame:
+        return b.select(
+            F.col(id_col).alias(id_as),
+            _to_double(F.col(vec_col)).alias(vec_as),
+            F.col("bucket"),
+        )
+
+    masks = _probe_masks(n_planes, multi_probe)
+    a_side = _explode_probes(side("id_a", "ea"), masks, ["id_a", "ea"])
+    return a_side, side("id_b", "eb")
 
 
 def embedding_near_dup_bucketed(
@@ -859,31 +924,12 @@ def embedding_near_dup_bucketed(
     plan; cache df or pin n_planes to avoid it); gated callers pin an
     explicit count to match their oracle's plane literals.
     """
-    if n_planes is None:
-        # max(1,·): empty corpus -> 1-plane minimum, not a ValueError
-        n = stats.n if stats is not None else df.count()
-        n_planes = recommended_n_planes(max(1, n))
-    b = with_lsh_bucket(df, dim, n_planes, vec_col)
-    a_side = _explode_probes(
-        b.select(
-            F.col(id_col).alias("id_a"),
-            _to_double(F.col(vec_col)).alias("ea"),
-            F.col("bucket"),
-        ),
-        _probe_masks(n_planes, multi_probe),
-        ["id_a", "ea"],
-    )
-    b_side = b.select(
-        F.col(id_col).alias("id_b"),
-        _to_double(F.col(vec_col)).alias("eb"),
-        F.col("bucket"),
+    a_side, b_side = _near_dup_sides(
+        df, dim, n_planes, multi_probe, id_col, vec_col, stats
     )
     pairs = a_side.join(b_side, "bucket").filter(F.col("id_a") < F.col("id_b"))
-    cos = F.round(
-        _dot(F.col("ea"), F.col("eb")) / (_gnorm(F.col("ea")) * _gnorm(F.col("eb"))), 6
-    )
     return (
-        pairs.select("id_a", "id_b", cos.alias("cosine"))
+        pairs.select("id_a", "id_b", _cosine("ea", "eb").alias("cosine"))
         .filter(F.col("cosine") >= F.lit(threshold))
     )
 
@@ -931,25 +977,8 @@ def embedding_near_dup_bucketed_arrow(
     """
     thr = float(threshold)
     blk_bytes = int(score_block_bytes)
-    if n_planes is None:
-        # max(1,·): empty corpus -> 1-plane minimum, not a ValueError
-        n = stats.n if stats is not None else df.count()
-        n_planes = recommended_n_planes(max(1, n))
-
-    b = with_lsh_bucket(df, dim, n_planes, vec_col)
-    a_side = _explode_probes(
-        b.select(
-            F.col(id_col).alias("id_a"),
-            _to_double(F.col(vec_col)).alias("ea"),
-            F.col("bucket"),
-        ),
-        _probe_masks(n_planes, multi_probe),
-        ["id_a", "ea"],
-    )
-    b_side = b.select(
-        F.col(id_col).alias("id_b"),
-        _to_double(F.col(vec_col)).alias("eb"),
-        F.col("bucket"),
+    a_side, b_side = _near_dup_sides(
+        df, dim, n_planes, multi_probe, id_col, vec_col, stats
     )
 
     def kernel(_key, adf, bdf):
@@ -1074,6 +1103,15 @@ def _assign_cluster(df: DataFrame, cents, vec_col: str, out: str = "cluster") ->
     return df.withColumn(out, assign(vec_col))
 
 
+def _centroid_frame(spark, cents, col: str) -> DataFrame:
+    """The (k, dim) centroid matrix as k rows of (cluster int, ``col``
+    array<double>)."""
+    return spark.createDataFrame(
+        [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
+        f"cluster int, {col} array<double>",
+    )
+
+
 def _probe_clusters(df: DataFrame, cents, vec_col: str, nprobe: int) -> DataFrame:
     """Top-nprobe nearest centroids per row, exploded to one row per
     probed cell (deterministic: scores sorted, ties by cluster id)."""
@@ -1098,6 +1136,9 @@ def _probe_clusters(df: DataFrame, cents, vec_col: str, nprobe: int) -> DataFram
     return df.withColumn("cluster", F.explode(probe(vec_col)))
 
 
+_IVF_MANIFEST = "_INDEX_MANIFEST.json"
+
+
 class IVFIndex:
     """A trained IVF index: the (k, dim) centroid matrix plus the
     corpus with cluster assignments — build once with ``ivf_index``,
@@ -1116,9 +1157,9 @@ class IVFIndex:
 
     def save(self, path: str, corpus_fingerprint: "str | None" = None) -> None:
         """Persist the index: centroids + assigned corpus as parquet,
-        then a write-then-publish manifest (same protocol as the
-        resumable pipeline — a save killed mid-write leaves no
-        manifest and loads as 'no index here', never half-read).
+        then a write-then-publish manifest (``_publish_index``, shared
+        with LSHIndex — a save killed mid-write leaves no manifest and
+        loads as 'no index here', never half-read).
 
         ``corpus_fingerprint``: pass ``ivf_corpus_fingerprint(corpus)``
         so a load against a CHANGED corpus is refused instead of
@@ -1130,34 +1171,15 @@ class IVFIndex:
         _write_parquet_replace). After save() returns, self.assigned
         is re-bound to the published parquet so this object remains
         searchable (round-8 advisor finding)."""
-        from lime_etl_spark.io.fsutil import HadoopFS
-
-        spark = self.assigned.sparkSession
-        fs = HadoopFS(spark, path)
-        # UNPUBLISH FIRST on re-save: write-then-publish means the
-        # manifest must be the LAST thing to exist — leaving a previous
-        # save's manifest published while the data dirs below are
-        # rewritten would let a crash mid-rewrite load as a valid index
-        # over torn parquet (the exact failure the protocol exists to
-        # prevent); delete on a missing path is a no-op
-        fs.delete(path.rstrip("/") + "/_INDEX_MANIFEST.json")
-        cent_rows = [
-            (int(i), [float(x) for x in row]) for i, row in enumerate(self.cents)
-        ]
-        _write_parquet_replace(
-            spark.createDataFrame(
-                cent_rows, "cluster int, centroid array<double>"
-            ).coalesce(1),
-            path.rstrip("/") + "/centroids",
-            fs,
-        )
-        # swap-write matters most here: a re-save of a LOADED index has
-        # self.assigned lazily reading path/assigned itself
-        _write_parquet_replace(
-            self.assigned, path.rstrip("/") + "/assigned", fs
-        )
-        fs.write_json_atomic(
-            path.rstrip("/") + "/_INDEX_MANIFEST.json",
+        centroids = _centroid_frame(
+            self.assigned.sparkSession, self.cents, "centroid"
+        ).coalesce(1)
+        # swap-write matters most for "assigned": a re-save of a LOADED
+        # index has self.assigned lazily reading path/assigned itself
+        self.assigned = _publish_index(
+            path,
+            _IVF_MANIFEST,
+            [("centroids", centroids), ("assigned", self.assigned)],
             {
                 "version": 1,
                 "n_clusters": int(self.cents.shape[0]),
@@ -1166,11 +1188,8 @@ class IVFIndex:
                 "dim": int(self.cents.shape[1]) if self.cents.ndim == 2 else 0,
                 "corpus_fingerprint": corpus_fingerprint,
             },
+            "assigned",
         )
-        # re-bind to the published files so a loaded-then-re-saved
-        # index stays searchable (mirrors LSHIndex.save; round-8
-        # advisor finding — the pre-swap plan references deleted parts)
-        self.assigned = spark.read.parquet(path.rstrip("/") + "/assigned")
 
 
 def ivf_corpus_fingerprint(
@@ -1207,36 +1226,9 @@ def ivf_index_load(
     mismatch must be loud, not a recall degradation discovered weeks
     later. Passing expected_fingerprint=None skips the check (the
     caller owns corpus-immutability some other way)."""
-    from lime_etl_spark.io.fsutil import HadoopFS
-
-    fs = HadoopFS(spark, path)
-    mp = path.rstrip("/") + "/_INDEX_MANIFEST.json"
-    if not fs.exists(mp):
-        raise ValueError(f"no published IVF index at {path} (missing manifest)")
-    try:
-        manifest = fs.read_json(mp)
-    except (ValueError, UnicodeDecodeError) as ex:
-        raise ValueError(
-            f"torn IVF index manifest at {mp}; re-save the index"
-        ) from ex
-    except Exception as ex:
-        # e.g. ChecksumException on a checksummed FS — a manifest that
-        # cannot be read for ANY reason means the index is unusable;
-        # surface one loud refusal with the cause chained, not a py4j
-        # traceback
-        raise ValueError(
-            f"unreadable IVF index manifest at {mp}; re-save the index"
-        ) from ex
-    if (
-        expected_fingerprint is not None
-        and manifest.get("corpus_fingerprint") != expected_fingerprint
-    ):
-        raise ValueError(
-            "stale IVF index: saved corpus_fingerprint "
-            f"{manifest.get('corpus_fingerprint')!r} != expected "
-            f"{expected_fingerprint!r} — the corpus changed since training; "
-            "rebuild with ivf_index(...)"
-        )
+    manifest = _load_manifest(
+        spark, path, _IVF_MANIFEST, "IVF", expected_fingerprint, "training"
+    )
     cent_rows = (
         spark.read.parquet(path.rstrip("/") + "/centroids")
         .orderBy("cluster")
@@ -1329,27 +1321,7 @@ def ivf_search(
         "qv",
         nprobe,
     )
-    scored = (
-        probes.join(index.assigned, "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv"))
-                / (_gnorm(F.col("qv")) * _gnorm(F.col("cv"))),
-                6,
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _pairs_topk(probes.join(index.assigned, "cluster"), k)
 
 
 def calibrate_nprobe(
@@ -1364,19 +1336,18 @@ def calibrate_nprobe(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> "tuple[int, float]":
-    """Measure-and-raise: find the smallest nprobe (from
-    ``start_nprobe``, doubling) whose recall@k against the EXACT top-k
-    meets ``target_recall`` on a deterministic probe sample.
+    """Measure-and-raise on the shared ``_recall_ladder``: find the
+    smallest nprobe (from ``start_nprobe``, doubling) whose recall@k
+    against the EXACT top-k meets ``target_recall`` on a deterministic
+    probe sample.
 
     Rationale: the recall a given nprobe delivers depends on the data's
     cluster structure and on how coarse sampled training left the
     centroids (measured at sf1: recall@5 0.59 → 0.84 as nprobe 4 → 8
     under train_max=2000) — no formula generalizes, so the knob is
     calibrated empirically. Cost is bounded: ONE exact pass for the
-    sample's ground truth (``sample`` probes broadcast against the
-    streamed corpus, ≤ sample·k result rows collected to the driver so
-    trials never re-execute the exact lineage), then one cheap
-    sample-search per trial against the SAME index (``assigned`` is
+    sample's ground truth, then one cheap sample-search per trial
+    against the SAME index (``assigned`` is
     cached for the duration of the calibration if the caller hadn't
     already, so trials don't re-run the full-corpus assignment),
     ≤ log2(k_cells) trials. Returns (nprobe, measured_recall); caps at
@@ -1386,45 +1357,26 @@ def calibrate_nprobe(
     measure: returns (clamped start_nprobe, NaN) — never a fabricated
     recall.
     """
-    if not 0.0 < target_recall <= 1.0:
-        raise ValueError(f"target_recall in (0, 1], got {target_recall}")
     n_cells = len(index.cents)
     if n_cells and index.cents.shape[1] != dim:
         raise ValueError(
             f"dim={dim} does not match the index's centroid width "
             f"{index.cents.shape[1]}"
         )
-    probe_set = queries.select(id_col, vec_col).orderBy(id_col).limit(sample)
-    exact = cosine_topk(probe_set, candidates, k=k, id_col=id_col, vec_col=vec_col)
-    # bounded: <= sample * k (query_id, neighbor_id) pairs
-    exact_pairs = {
-        (r.query_id, r.neighbor_id)
-        for r in exact.select("query_id", "neighbor_id").collect()
-    }
-    if not exact_pairs:
-        # nothing to measure against (empty/degenerate probe set) —
-        # return NaN, not a fabricated 1.0, so callers can tell a
-        # vacuous calibration from a real one (r5 advice); NaN also
-        # compares False against any target, so ivf_topk neither
-        # warns nor claims the target was met
-        return min(max(1, start_nprobe), max(1, n_cells)), float("nan")
-    nprobe = min(max(1, start_nprobe), max(1, n_cells))
+    rungs = [min(max(1, start_nprobe), max(1, n_cells))]
+    while rungs[-1] < n_cells:
+        rungs.append(min(n_cells, rungs[-1] * 2))
     we_cached = not index.assigned.is_cached
     if we_cached:
         index.assigned.cache()
     try:
-        while True:
-            approx = ivf_search(
-                probe_set, index, k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col
-            )
-            got = {
-                (r.query_id, r.neighbor_id)
-                for r in approx.select("query_id", "neighbor_id").collect()
-            }
-            recall = len(exact_pairs & got) / len(exact_pairs)
-            if recall >= target_recall or nprobe >= n_cells:
-                return nprobe, recall
-            nprobe = min(n_cells, nprobe * 2)
+        return _recall_ladder(
+            queries, candidates, k, target_recall, sample, id_col, vec_col,
+            [(nprobe,) for nprobe in rungs],
+            lambda probes, nprobe: ivf_search(
+                probes, index, k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col
+            ),
+        )
     finally:
         if we_cached:
             index.assigned.unpersist()
@@ -1615,16 +1567,10 @@ def _semantic_ranked(
         )
     v = df.select(F.col(id_col).alias("__sid"), _to_double(F.col(vec_col)).alias("e"))
     assigned = _assign_cluster(v, cents, "e")
-    cdf = spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cluster int, ce array<double>",
-    )
+    cdf = _centroid_frame(spark, cents, "ce")
     # bounded by contract: one row per cluster (n_clusters API arg)
     j = assigned.join(auto_broadcast(cdf, bounded=True), "cluster", "left")
-    cent_cos = F.round(
-        _dot(F.col("e"), F.col("ce")) / (_gnorm(F.col("e")) * _gnorm(F.col("ce"))), 9
-    )
-    return j.select("__sid", "e", "cluster", cent_cos.alias("cent_cos"))
+    return j.select("__sid", "e", "cluster", _cosine("e", "ce", 9).alias("cent_cos"))
 
 
 def _survivor_projection(ranked: DataFrame, id_col: str) -> DataFrame:
@@ -1696,13 +1642,10 @@ def semantic_dedup(
         F.col("__sid").alias("id_b"),
         F.col("e").alias("eb"),
     )
-    cos = F.round(
-        _dot(F.col("ea"), F.col("eb")) / (_gnorm(F.col("ea")) * _gnorm(F.col("eb"))), 6
-    )
     dropped = (
         a.join(b, "cluster")
         .filter(F.col("rk_a") < F.col("rk_b"))
-        .filter(cos >= F.lit(threshold))
+        .filter(_cosine("ea", "eb") >= F.lit(threshold))
         .select("id_b")
         .distinct()
     )

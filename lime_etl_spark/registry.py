@@ -2110,7 +2110,7 @@ def dedup_embedding_cosine(spark, sf_dir):
     size-based planning picks BroadcastNestedLoopJoin at the fixture
     sizes this twin exists for, and a corpus too big to broadcast is
     exactly the case where the bucketed twin is the only sane plan."""
-    from lime_etl_spark.ops.similarity import _dot, _gnorm, _to_double
+    from lime_etl_spark.ops.similarity import _cosine, _to_double
     from lime_etl_spark.ops.util import ensure_parallelism
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -2120,11 +2120,8 @@ def dedup_embedding_cosine(spark, sf_dir):
         v.select(F.col("vec_id").alias("id_b"), F.col("e").alias("eb"))
     )
     pairs = auto_broadcast(a, table="embeddings").join(b, F.col("id_a") < F.col("id_b"))
-    cos = F.round(
-        _dot(F.col("ea"), F.col("eb")) / (_gnorm(F.col("ea")) * _gnorm(F.col("eb"))), 6
-    )
     return (
-        pairs.select("id_a", "id_b", cos.alias("cosine"))
+        pairs.select("id_a", "id_b", _cosine("ea", "eb").alias("cosine"))
         .filter(F.col("cosine") >= 0.3)
     )
 

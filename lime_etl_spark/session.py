@@ -77,6 +77,51 @@ def _heap_floor(heap: str) -> str:
 TIMING_JAVA_OPTIONS = f"-XX:+UseG1GC -Xms{_heap_floor(DEFAULT_LOCAL_DRIVER_MEM)}"
 
 
+# Correctness-critical confs: get_spark sets every one on the builder
+# and, after getOrCreate, checks every one on the session it returns —
+# one table, so a conf cannot be set without being checked.
+_CORRECTNESS_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    # Parquet TIMESTAMP(NANOS) (the events fixture) is unreadable by
+    # Spark natively; read as long and convert in io.sources.read_table.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Fixture timestamps are wall-clock values compared against
+    # DuckDB's naive TIMESTAMP under a UTC session TZ; load
+    # isAdjustedToUTC=false parquet micros as plain TIMESTAMP rather
+    # than TIMESTAMP_NTZ (NTZ is rejected by instant functions like
+    # unix_micros, and the two render identically under UTC).
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # Spark 4.1 UNSOUNDNESS (found by this repo's generative
+    # differential sweep, seed 1869): with unionOutputPartitioning
+    # =true (the 4.1.2 DEFAULT), UnionExec advertises its children's
+    # hash partitioning, and a downstream aggregate/set-op then
+    # SKIPS its exchange — but equal keys live in DIFFERENT leg
+    # partitions (union concatenates partition lists), so byte-
+    # identical group keys land in separate hash groups. Observed:
+    # groupBy over a union of two filters of a window-bearing
+    # distinct-union produced 12 groups for 5 distinct string keys;
+    # exceptAll ignored its subtrahend entirely (620 vs 498 rows)
+    # and intersectAll returned 0 for 122 true matches, while the
+    # identical SQL text (different plan shape) was correct.
+    # Disabling the optimization restores the exchange. Regression:
+    # tests/test_plans.py::test_union_output_partitioning_unsound.
+    "spark.sql.unionOutputPartitioning": "false",
+    # Spark 4.1's checksum checkpoint manager deadlocks stateful-op
+    # state-store commits on local filesystems (async checksum write
+    # never resolves); corruption detection matters on real HDFS/S3
+    # checkpoints, not local test dirs.
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
+    # InferFiltersFromGenerate + CollapseProject inline the ENTIRE
+    # generator expression (e.g. tokenize->shingle, ~ms/row) into a
+    # synthesized size()>0 filter and push it below repartitions —
+    # re-evaluating the expensive expression per row, sometimes
+    # single-threaded. Its benefit (skip empty arrays pre-explode)
+    # is negligible for this workload; measured 2x on dedup queries.
+    "spark.sql.optimizer.excludedRules":
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+}
+
+
 def _was_submitted() -> bool:
     """True when this process was launched by spark-submit (or a master
     is otherwise configured), i.e. the local[N] fallback must NOT apply.
@@ -120,47 +165,7 @@ def get_spark(
     """
     builder = (
         SparkSession.builder.appName(app_name)
-        # --- correctness-critical ---
-        .config("spark.sql.session.timeZone", "UTC")
-        # Parquet TIMESTAMP(NANOS) (the events fixture) is unreadable by
-        # Spark natively; read as long and convert in io.sources.read_table.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Fixture timestamps are wall-clock values compared against
-        # DuckDB's naive TIMESTAMP under a UTC session TZ; load
-        # isAdjustedToUTC=false parquet micros as plain TIMESTAMP rather
-        # than TIMESTAMP_NTZ (NTZ is rejected by instant functions like
-        # unix_micros, and the two render identically under UTC).
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # Spark 4.1 UNSOUNDNESS (found by this repo's generative
-        # differential sweep, seed 1869): with unionOutputPartitioning
-        # =true (the 4.1.2 DEFAULT), UnionExec advertises its children's
-        # hash partitioning, and a downstream aggregate/set-op then
-        # SKIPS its exchange — but equal keys live in DIFFERENT leg
-        # partitions (union concatenates partition lists), so byte-
-        # identical group keys land in separate hash groups. Observed:
-        # groupBy over a union of two filters of a window-bearing
-        # distinct-union produced 12 groups for 5 distinct string keys;
-        # exceptAll ignored its subtrahend entirely (620 vs 498 rows)
-        # and intersectAll returned 0 for 122 true matches, while the
-        # identical SQL text (different plan shape) was correct.
-        # Disabling the optimization restores the exchange. Regression:
-        # tests/test_plans.py::test_union_output_partitioning_unsound.
-        .config("spark.sql.unionOutputPartitioning", "false")
-        # Spark 4.1's checksum checkpoint manager deadlocks stateful-op
-        # state-store commits on local filesystems (async checksum write
-        # never resolves); corruption detection matters on real HDFS/S3
-        # checkpoints, not local test dirs.
-        .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-        # InferFiltersFromGenerate + CollapseProject inline the ENTIRE
-        # generator expression (e.g. tokenize->shingle, ~ms/row) into a
-        # synthesized size()>0 filter and push it below repartitions —
-        # re-evaluating the expensive expression per row, sometimes
-        # single-threaded. Its benefit (skip empty arrays pre-explode)
-        # is negligible for this workload; measured 2x on dedup queries.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
+        .config(map=_CORRECTNESS_CONFS)
         # --- scale posture ---
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -202,24 +207,8 @@ def get_spark(
     # locked conf), warn with the exact mismatches instead of silently
     # handing back e.g. local-time timestamps that break every oracle
     # comparison.
-    critical = {
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
-        # the two below were missing from the check (round-6 review):
-        # NTZ inference flips parquet micros to TIMESTAMP_NTZ (instant
-        # functions reject them), and the excluded optimizer rule is a
-        # measured 2x on the dedup queries
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-        "spark.sql.optimizer.excludedRules":
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        # unsound union partitioning propagation (see builder comment):
-        # a reused session with the 4.1 default silently splits hash
-        # groups under union-of-copartitioned-legs plans
-        "spark.sql.unionOutputPartitioning": "false",
-    }
     mismatched = {}
-    for k, want in critical.items():
+    for k, want in _CORRECTNESS_CONFS.items():
         got = spark.conf.get(k, None)
         if got != want:
             mismatched[k] = (want, got)

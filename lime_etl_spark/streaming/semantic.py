@@ -78,8 +78,8 @@ from lime_etl_spark.plans import auto_broadcast
 
 from lime_etl_spark.ops.similarity import (
     _assign_cluster,
-    _dot,
-    _gnorm,
+    _centroid_frame,
+    _cosine,
     _to_double,
 )
 from lime_etl_spark.streaming.state import _Pin, commit_batch, decision_guard
@@ -147,14 +147,7 @@ def process_batch(
         .agg(F.min_by("e", F.xxhash64(F.col("e"))).alias("e"))
     )
     assigned = _assign_cluster(new, cents, "e")
-    cdf = spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cluster int, ce array<double>",
-    )
-    cent_cos = F.round(
-        _dot(F.col("e"), F.col("ce")) / (_gnorm(F.col("e")) * _gnorm(F.col("ce"))),
-        9,
-    )
+    cdf = _centroid_frame(spark, cents, "ce")
     asc = keep == "farthest"
     order = [
         F.col("cent_cos").asc() if asc else F.col("cent_cos").desc(),
@@ -163,7 +156,7 @@ def process_batch(
     ranked = (
         # bounded by contract: one row per cluster (n_clusters arg)
         assigned.join(auto_broadcast(cdf, bounded=True), "cluster", "left")
-        .select("vec_id", "cluster", "e", cent_cos.alias("cent_cos"))
+        .select("vec_id", "cluster", "e", _cosine("e", "ce", 9).alias("cent_cos"))
         .withColumn(
             "rk", F.row_number().over(Window.partitionBy("cluster").orderBy(*order))
         )
@@ -210,11 +203,7 @@ def process_batch(
         ranked_pin = _Pin(guard.filter_prior(ranked, batch_id))
         guarded = ranked_pin.df
 
-        pair_cos = F.round(
-            _dot(F.col("ea"), F.col("eb"))
-            / (_gnorm(F.col("ea")) * _gnorm(F.col("eb"))),
-            6,
-        )
+        pair_cos = _cosine("ea", "eb")
         # Prune the member-state read to the batch's own cells
         # (round-11, guide §6 predicate pushdown): a micro-batch touches
         # at most n_clusters cells and the centroid matrix is already

@@ -187,14 +187,19 @@ def duck_connect(sf_dir: str):
 
     import duckdb
 
+    from lime_etl_spark.session import _local_driver_mem
+
     con = duckdb.connect()
     # bound the oracle: generated queries can draw self-outer joins
     # whose intermediates are ~rows^2 on a hot key — at sf10 one such
     # oracle ballooned to 49 GB RSS and the kernel OOM-killed the whole
     # sweep. A memory cap makes DuckDB spill to disk instead; paired
     # with the per-seed wall budget, a pathological draw costs bounded
-    # time and memory, never the sweep.
-    con.sql("SET memory_limit='16GB'")
+    # time and memory, never the sweep. The cap is the driver heap's
+    # host rule (a quarter of RAM, at least 1 GiB): a fixed size above
+    # DuckDB's own 80%-of-RAM default would raise the cap on a small
+    # host, beside the sweep's Spark driver JVM.
+    con.sql(f"SET memory_limit='{_local_driver_mem(None)[:-1]}MiB'")
     con.sql("SET temp_directory='/tmp/duck_spill'")
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

@@ -1157,3 +1157,64 @@ def test_calibrate_lsh_depth_empty_probe_set_returns_nan(spark, sf_dir, tmp_path
         emb.filter(F.col("vec_id") < 0), loaded, k=5, target_recall=0.9
     )
     assert depth == 1 and measured != measured  # NaN, never a fabricated 1.0
+
+
+def test_indexes_in_the_saved_on_disk_layout_load_and_search(spark, sf_dir, tmp_path):
+    """Index directories already on disk must keep loading: manifests
+    written by hand in the published layout (file names and key sets
+    of LSHIndex.save / IVFIndex.save) beside parquet parts of a freshly
+    built index load with lsh_index_load / ivf_index_load and search
+    exactly like the in-memory index. The round-trip tests only prove
+    that save and load agree with each other."""
+    import json
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 16)
+    fp = similarity.lsh_corpus_fingerprint(emb)
+
+    lsh = similarity.lsh_index(emb, dim=64, n_planes=5)
+    lsh.bucketed.write.parquet(str(tmp_path / "lsh" / "bucketed"))
+    (tmp_path / "lsh" / "_LSH_INDEX_MANIFEST.json").write_text(
+        json.dumps(
+            {"version": 1, "dim": 64, "n_planes": 5, "corpus_fingerprint": fp}
+        )
+    )
+    loaded = similarity.lsh_index_load(
+        spark, str(tmp_path / "lsh"), expected_fingerprint=fp
+    )
+    assert (loaded.dim, loaded.n_planes) == (64, 5)
+    fresh = sorted(map(tuple, similarity.lsh_search(q, lsh, k=5).collect()))
+    got = sorted(map(tuple, similarity.lsh_search(q, loaded, k=5).collect()))
+    assert got == fresh and fresh
+
+    ivf = similarity.ivf_index(emb, dim=64, n_clusters=8)
+    spark.createDataFrame(
+        [(i, [float(x) for x in row]) for i, row in enumerate(ivf.cents)],
+        "cluster int, centroid array<double>",
+    ).write.parquet(str(tmp_path / "ivf" / "centroids"))
+    ivf.assigned.write.parquet(str(tmp_path / "ivf" / "assigned"))
+    (tmp_path / "ivf" / "_INDEX_MANIFEST.json").write_text(
+        json.dumps(
+            {"version": 1, "n_clusters": 8, "dim": 64, "corpus_fingerprint": fp}
+        )
+    )
+    loaded = similarity.ivf_index_load(
+        spark, str(tmp_path / "ivf"), expected_fingerprint=fp
+    )
+    assert loaded.cents.shape == (8, 64)
+    fresh = sorted(map(tuple, similarity.ivf_search(q, ivf, k=5, nprobe=4).collect()))
+    got = sorted(map(tuple, similarity.ivf_search(q, loaded, k=5, nprobe=4).collect()))
+    assert got == fresh and fresh
+
+
+def test_calibrate_lsh_depth_on_a_zero_plane_index(spark, sf_dir):
+    """A 0-plane index is one bucket, so depth 0 is its only valid
+    probing depth and is already exact search: calibration picks it
+    instead of running out of rungs."""
+    emb = read_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 8)
+    index = similarity.lsh_index(emb, dim=64, n_planes=0)
+    assert similarity.calibrate_lsh_depth(q, index, k=5) == (0, 1.0)
+    got = similarity.lsh_search(q, index, k=5, target_recall=0.9).collect()
+    exact = similarity.cosine_topk(q, emb, k=5).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, exact))

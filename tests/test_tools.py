@@ -196,6 +196,38 @@ def test_local_session_sizing_from_env_and_host():
     assert _heap_floor("4194304k") == "4194304k"
 
 
+def test_session_carries_every_correctness_conf(spark):
+    """get_spark sets and verifies one table of correctness-critical
+    confs; every entry must hold on the session the suite runs on."""
+    from lime_etl_spark.session import _CORRECTNESS_CONFS
+
+    assert _CORRECTNESS_CONFS
+    assert {k: spark.conf.get(k, None) for k in _CORRECTNESS_CONFS} == _CORRECTNESS_CONFS
+
+
+def test_gencheck_duckdb_memory_limit_is_host_sized(sf_dir):
+    """The DuckDB oracle's memory cap follows the driver heap's host
+    rule — a quarter of RAM, at least 1 GiB — instead of a fixed 16GB,
+    which on a 16 GiB host sat above DuckDB's own 80%-of-RAM default.
+    Starts no Spark session."""
+    import os
+
+    from lime_etl_spark.tools.gencheck import duck_connect
+
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    quarter = max(2**30, ram // 4)
+    con = duck_connect(sf_dir)
+    try:
+        value, unit = con.sql(
+            "SELECT current_setting('memory_limit')"
+        ).fetchone()[0].split()
+    finally:
+        con.close()
+    scale = {"KiB": 2**10, "MiB": 2**20, "GiB": 2**30, "TiB": 2**40}[unit]
+    # DuckDB prints the limit to one decimal of its unit
+    assert float(value) * scale <= quarter + 0.05 * scale, (value, unit, quarter)
+
+
 def test_gencheck_canon_and_compare_primitives():
     """The generative harness's exactness primitives: full-precision
     hex floats, scale-insensitive Decimal normalization (Spark
